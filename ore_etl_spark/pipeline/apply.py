@@ -15,16 +15,21 @@ fixed by construction: the non-atomic state-after-save window (batch-id is
 inside the committed snapshot) and the unconditional upsert (conditional
 LWW in the MERGE).
 
-Scale notes: the batch scan is a parquet range filter (pushed down;
-min/max row-group pruning on delivery_seq since the WAL is written in
-arrival order). Decode is narrow — no shuffle. The only shuffle is the
-key hash for dedup+MERGE join, and the target-side read is pruned to
-touched buckets. Per-batch driver work is O(buckets + partitions), never
-O(events).
+Scale notes: for a parquet WAL the head and the batch scan are planned
+from per-file ``delivery_seq`` footer bounds (Iceberg manifest parity):
+the head is a footer read per NEW file, with no Spark job, and a batch
+reads only the files whose bounds meet its range, with the row filter
+pushed down on top (row-group pruning, since the WAL is written in
+arrival order). Decode is narrow — no shuffle. COW's only shuffle is the
+key hash for dedup+MERGE join, with the target-side read pruned to
+touched buckets; MOR appends with no shuffle at all. Per-batch driver
+work is O(buckets + partitions + new WAL files), never O(events).
 """
 
 from __future__ import annotations
 
+import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,7 +38,7 @@ from pyspark.sql import types as T
 
 from ..operators.decode import decode_events
 from ..state.stores import CheckpointStore, MetricsLog
-from ..tables.merge_table import MergeTable
+from ..tables.merge_table import MergeTable, _pyarrow_file_bounds
 
 TARGET_FIELDS = [
     ("repo", T.StringType()),
@@ -59,6 +64,24 @@ DECODE_ADDED = ("payload_version", "content", "content_len",
                 "content_sha256", "is_valid")
 
 
+def _spark_hidden(name: str) -> bool:
+    """Names Spark's file listing skips (HadoopFSUtils.shouldFilterOutPathName)."""
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def _footer_bounds(path: str) -> list | None:
+    """[min, max] of one WAL file's ``delivery_seq`` from its footer, or
+    None when they are missing or not integers."""
+    try:
+        b = _pyarrow_file_bounds(path, ["delivery_seq"]).get("delivery_seq")
+    except (OSError, ValueError):  # gone or not parquet (ArrowInvalid):
+        return None                # leave it to Spark's reader
+    if b is None or not all(type(v) is int for v in b):
+        return None
+    return b
+
+
 class CdcApplyPipeline:
     def __init__(
         self,
@@ -72,7 +95,6 @@ class CdcApplyPipeline:
         mode: str = "cow",
         compact_every: int | None = None,
         compact_depth: int | None = None,
-        mor_fast_path: bool = False,
         mor_append_rows_per_task: int | None = 32_000,
         events_format: str = "parquet",
         source_schema: T.StructType | None = None,
@@ -114,8 +136,7 @@ class CdcApplyPipeline:
         self.mode = mode
         self.compact_every = compact_every
         self.compact_depth = compact_depth
-        self.mor_fast_path = mor_fast_path  # shuffle-free delta append
-        # fast-path delta files per batch = write tasks x n_buckets, so
+        # MOR delta files per batch = write tasks x n_buckets, so
         # scan-width writes are pure file-count amplification (~100-row
         # files at bench scale). The append is coalesced (NOT shuffled —
         # the no-Exchange contract holds) to ceil(batch_rows / this)
@@ -125,6 +146,12 @@ class CdcApplyPipeline:
         # end-to-end on the 1M-event apply). None/0 disables.
         self.mor_append_rows_per_task = mor_append_rows_per_task
         self._batches_since_compact = 0
+        # WAL footer index: path -> ((size, mtime_ns), [min, max] of
+        # delivery_seq or None); the schema the whole-dir read infers,
+        # keyed by the listing facts it depends on
+        self._footer_index: dict[str, tuple] = {}
+        self._wal_schema_cache: tuple | None = None
+        self._footer_lock = threading.Lock()
         self.checkpoints = CheckpointStore(f"{state_dir}/checkpoints.json")
         self.metrics = MetricsLog(f"{state_dir}/metrics.jsonl")
         self.quarantine_dir = f"{state_dir}/quarantine"
@@ -166,7 +193,93 @@ class CdcApplyPipeline:
                                   keep_malformed=True,
                                   **self.source_options)
 
+    def _wal_files(self) -> list[tuple] | None:
+        """``(path, (size, mtime_ns), bounds)`` for each data file Spark's
+        reader would list in a flat local parquet WAL dir, sorted by path.
+        ``bounds`` is the file's ``delivery_seq`` [min, max] from its
+        footer, or None when the footer has no integer min/max (an
+        all-null row group, an empty file). Footers are read only for
+        files that are new or changed since the last call. None when the
+        WAL is not such a dir (other formats, a URI, a nested/partitioned
+        layout): callers then take the Spark path."""
+        if self.events_format != "parquet" or not os.path.isdir(self.events_path):
+            return None
+        listing = []
+        with os.scandir(self.events_path) as it:
+            for e in it:
+                if e.name.startswith(("_metadata", "_common_metadata")):
+                    return None  # summary files steer Spark's inference
+                if _spark_hidden(e.name):
+                    continue
+                if not e.is_file():
+                    return None
+                st = e.stat()
+                listing.append((e.path, (st.st_size, st.st_mtime_ns)))
+        listing.sort()
+        with self._footer_lock:
+            old, index = self._footer_index, {}
+            for path, sig in listing:
+                hit = old.get(path)
+                index[path] = (hit if hit is not None and hit[0] == sig
+                               else (sig, _footer_bounds(path)))
+            self._footer_index = index
+        return [(path, sig, index[path][1]) for path, sig in listing]
+
+    def _wal_schema(self, files: list[tuple]) -> T.StructType:
+        """The schema ``events()`` infers for the WAL dir. Spark takes it
+        from the first data file by path (from every file under
+        mergeSchema), so it is inferred again only when those change."""
+        merge = self.spark.conf.get("spark.sql.parquet.mergeSchema",
+                                    "false").lower() == "true"
+        key = files if merge else files[:1]
+        cached = self._wal_schema_cache
+        if cached is None or cached[0] != key:
+            cached = self._wal_schema_cache = (key, self.events().schema)
+        return cached[1]
+
+    def _range_events(self, seq_lo: int, seq_hi: int) -> DataFrame:
+        """WAL rows with ``delivery_seq`` in (seq_lo, seq_hi]. A flat local
+        parquet WAL reads only the files whose footer bounds meet the
+        range, with the schema the whole-dir read infers — the batch's
+        columns do not depend on which files it reads."""
+        rng = ((F.col("delivery_seq") > seq_lo)
+               & (F.col("delivery_seq") <= seq_hi))
+        files = self._wal_files()
+        if not files:
+            return self.events().filter(rng)
+        schema = self._wal_schema(files)
+        keep = [(p, b) for p, _, b in files
+                if b is None or (b[1] > seq_lo and b[0] <= seq_hi)]
+        if not keep:
+            return self.spark.createDataFrame([], schema)
+        reader = self.spark.read.schema(schema)
+        # past this many root paths Spark lists them in a Spark job; the
+        # whole dir is one root, listed on the driver
+        limit = int(self.spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"))
+        if len(keep) > limit:
+            return reader.parquet(self.events_path).filter(rng)
+        # when every file read lies inside the range (a tail batch over
+        # newly landed files), the footers prove the range predicate for
+        # each non-null delivery_seq, so the row filter is just IS NOT
+        # NULL. That matters for cost: Spark inlines long literals into
+        # the generated code, so a new (lo, hi] each batch would compile
+        # every stage scanning the batch anew (~6 classes, ~0.2 s a batch
+        # on 4 cores); the literal-free filter hits the codegen cache.
+        inside = all(b is not None and seq_lo < b[0] and b[1] <= seq_hi
+                     for _, b in keep)
+        return reader.parquet(*[p for p, _ in keep]).filter(
+            F.col("delivery_seq").isNotNull() if inside else rng)
+
     def delivery_range(self) -> tuple[int, int]:
+        """(min, max) ``delivery_seq`` of the WAL. A flat local parquet WAL
+        answers from its footer index (no Spark job); anything else —
+        other formats, or a file without footer bounds — runs the Spark
+        aggregate."""
+        files = self._wal_files()
+        if files and all(b is not None for _, _, b in files):
+            return (min(b[0] for _, _, b in files),
+                    max(b[1] for _, _, b in files))
         r = self.events().agg(
             F.min("delivery_seq").alias("lo"), F.max("delivery_seq").alias("hi")
         ).collect()[0]
@@ -249,9 +362,7 @@ class CdcApplyPipeline:
         row — valid or invalid — is owned by exactly one slice (invalid
         rows are quarantined once, by their owner, never S times or
         zero)."""
-        batch = self.events().filter(
-            (F.col("delivery_seq") > seq_lo) & (F.col("delivery_seq") <= seq_hi)
-        )
+        batch = self._range_events(seq_lo, seq_hi)
         bucket = self.table.bucket_expr()
         if bucket_slice is not None:
             k, n_slices = bucket_slice
@@ -282,10 +393,14 @@ class CdcApplyPipeline:
         (see ``_stats_phase``) and the default batch id is slice-qualified
         — each slice of a range is its own idempotency unit.
 
-        Exactly TWO Spark jobs per batch (plus one only when quarantine is
-        non-empty): a single stats pass (counters, per-partition watermarks,
-        touched buckets, schema-evolution column presence) and the
-        dedup+MERGE+write job. Deliberately NO ``.persist()`` of the decoded
+        Spark jobs per batch: one stats pass (counters, per-partition
+        watermarks, touched buckets, schema-evolution column presence),
+        then the write — a shuffle-free append for MOR, the dedup+MERGE
+        job(s) for COW — plus the quarantine write when the batch has
+        invalid rows, and a compaction when the MOR cadence trips. For a
+        parquet WAL the scan is planned from footer bounds (only files
+        meeting the range are read), so no listing or schema-inference
+        job precedes it. Deliberately NO ``.persist()`` of the decoded
         frame: local-mode cache materialization serializes on the block
         manager (measured 53 s at 32 threads vs 26 s at 8 on a 505k-event
         batch — anti-scalable), while recomputing the narrow decode is a
@@ -324,13 +439,14 @@ class CdcApplyPipeline:
         # re-decode after an upstream repair; attempts counts decode tries
         # (reference x-retry-count, transaction-consumer.ts:145-174).
         # r6 (guide §2.6 overlap): the write runs on a worker thread
-        # CONCURRENTLY with the merge's own jobs (it re-scans the batch
-        # range to extract the bad rows — ~0.6 s of mostly-idle-core work
-        # the merge's serial tails can absorb) and is joined at the
+        # CONCURRENTLY with the merge's own jobs and is joined at the
         # merge's pre-commit barrier: the quarantine must be durable
         # BEFORE the snapshot flips, because a replay of a committed
         # batch_id skips the batch entirely and would never re-park them.
-        quarantine_fut = None
+        # Every exit from the merge also awaits it (``finally`` below), so
+        # a merge that skips the barrier (its batch already committed)
+        # still surfaces a failed write and leaves no thread behind.
+        qpool = quarantine_fut = pre_commit = None
         if qn > 0:
             # heal any interrupted redrive swap BEFORE writing: creating
             # the dir here would otherwise strand a complete .next
@@ -345,57 +461,61 @@ class CdcApplyPipeline:
             qdir = f"{self.quarantine_dir}/batch_id={batch_id.replace(':', '_')}"
             from concurrent.futures import ThreadPoolExecutor
 
-            _qpool = ThreadPoolExecutor(max_workers=1)
-            quarantine_fut = _qpool.submit(
+            qpool = ThreadPoolExecutor(max_workers=1)
+            quarantine_fut = qpool.submit(
                 lambda: bad.write.mode("overwrite").parquet(qdir))
-            _qpool.shutdown(wait=False)
-        pre_commit = quarantine_fut.result if quarantine_fut is not None else None
+            pre_commit = quarantine_fut.result
 
-        # --- job 2: dedup + conditional-LWW MERGE + snapshot commit --------
+        # --- the write: MOR shuffle-free append / COW LWW MERGE ------------
         cols = [n for n, _ in TARGET_FIELDS] + ["op"]
         valid = decoded.filter(F.col("is_valid")).select(*cols, *extra)
-        if self.mode == "mor":
-            coal = None
-            if self.mor_fast_path and self.mor_append_rows_per_task:
-                n_valid = sum((r["n_in"] or 0) - (r["n_bad"] or 0)
-                              for r in part_stats)
-                per = self.mor_append_rows_per_task
-                n1 = -(-n_valid // per) or 1
-                # small-batch width floor (guide §1.2/§6): the append wall
-                # has a file-count term (~n_buckets files PER TASK, paid in
-                # parallel, so ~constant in width) plus the narrow
-                # scan->decode, which coalesce serializes onto the write
-                # tasks. Below ~8 tasks the decode serialization dominates
-                # the files saved: measured 2.9 s at width 4 vs 2.0 s at
-                # width 16 on a 100k-row batch (64 buckets). So small
-                # batches size at per/2 rows per task, capped at the width
-                # an 8-task batch would get — big batches keep the
-                # per-task sizing (their file count feeds compaction), and
-                # per=10^9-style "one task" configs still resolve to 1.
-                n2 = -(-(2 * n_valid) // per) or 1
-                coal = min(n2, max(8, n1))
-            m = self.table.merge_mor(
-                valid, batch_id, touched_buckets=touched,
-                dedup_in_batch=not self.mor_fast_path,
-                bucket_shuffle=not self.mor_fast_path,
-                write_coalesce=coal,
-                pre_commit=pre_commit,
-            )
-            self._batches_since_compact += 1
-            due = (self.compact_every
-                   and self._batches_since_compact >= self.compact_every)
-            deep = (self.compact_depth
-                    and self.table.delta_depth() > self.compact_depth)
-            if due or deep:
-                self.table.compact(f"compact:{batch_id}")
-                self._batches_since_compact = 0
-        else:
-            m = self.table.merge(valid, batch_id, touched_buckets=touched,
-                                 collect_metrics=self.collect_metrics,
-                                 pre_commit=pre_commit)
+        try:
+            if self.mode == "mor":
+                m = self.table.merge_mor(
+                    valid, batch_id, write_coalesce=self._append_width(part_stats),
+                    pre_commit=pre_commit)
+                self._batches_since_compact += 1
+                due = (self.compact_every
+                       and self._batches_since_compact >= self.compact_every)
+                deep = (self.compact_depth
+                        and self.table.delta_depth() > self.compact_depth)
+                if due or deep:
+                    self.table.compact(f"compact:{batch_id}")
+                    self._batches_since_compact = 0
+            else:
+                m = self.table.merge(valid, batch_id, touched_buckets=touched,
+                                     collect_metrics=self.collect_metrics,
+                                     pre_commit=pre_commit)
+        finally:
+            if qpool is not None:
+                qpool.shutdown(wait=True)
+        if quarantine_fut is not None:
+            quarantine_fut.result()  # raises a failed write the merge skipped
 
         return self._finish_batch(batch_id, seq_lo, seq_hi, part_stats, qn,
                                   m, update_global_hwm, t0)
+
+    def _append_width(self, part_stats) -> int | None:
+        """Write tasks for a MOR append, sized from the stats row count:
+        ceil(valid rows / ``mor_append_rows_per_task``), with a floor for
+        small batches (below). None = scan width."""
+        per = self.mor_append_rows_per_task
+        if not per:
+            return None
+        n_valid = sum((r["n_in"] or 0) - (r["n_bad"] or 0) for r in part_stats)
+        n1 = -(-n_valid // per) or 1
+        # small-batch width floor (guide §1.2/§6): the append wall has a
+        # file-count term (~n_buckets files PER TASK, paid in parallel, so
+        # ~constant in width) plus the narrow scan->decode, which coalesce
+        # serializes onto the write tasks. Below ~8 tasks the decode
+        # serialization dominates the files saved: measured 2.9 s at width
+        # 4 vs 2.0 s at width 16 on a 100k-row batch (64 buckets). So
+        # small batches size at per/2 rows per task, capped at the width
+        # an 8-task batch would get — big batches keep the per-task sizing
+        # (their file count feeds compaction), and per=10^9-style "one
+        # task" configs still resolve to 1.
+        n2 = -(-(2 * n_valid) // per) or 1
+        return min(n2, max(8, n1))
 
     def _finish_batch(self, batch_id: str, seq_lo: int, seq_hi: int,
                       part_stats, qn: int, m, update_global_hwm: bool,
@@ -486,7 +606,7 @@ class CdcApplyPipeline:
         if not ranges:
             return []
 
-        # r6 (guide §2.6): MOR fast-path batches are order-independent by
+        # r6 (guide §2.6): MOR batches are order-independent by
         # construction — shuffle-free delta APPENDS whose CAS commits
         # rebase unconditionally and whose LWW is resolved at read — so
         # two batches can be in flight at once, the second back-filling
@@ -500,7 +620,7 @@ class CdcApplyPipeline:
         # prefix (replays are snapshot-level no-ops). COW stays
         # sequential: its merges read the parent snapshot, so concurrent
         # COW batches would just recompute under CommitConflict.
-        if (self.mode == "mor" and self.mor_fast_path and len(ranges) > 1
+        if (self.mode == "mor" and len(ranges) > 1
                 and self.compact_every is None and self.compact_depth is None
                 and self.spark.sparkContext.defaultParallelism >= 16):
             # (mid-stream auto-compaction stays sequential: two threads

@@ -702,13 +702,10 @@ class MergeTable:
         op_col: str | None = "op",
         delete_value: str = "DELETE",
         evolve_schema: bool = True,
-        touched_buckets: list[int] | None = None,
-        dedup_in_batch: bool = True,
-        bucket_shuffle: bool = True,
         write_coalesce: int | None = None,
         pre_commit=None,
     ) -> MergeMetrics:
-        """Merge-on-read upsert: append deduped delta files, resolve at read.
+        """Merge-on-read upsert: append delta files, resolve at read.
 
         ``pre_commit``: optional zero-arg callable invoked after the data
         write but BEFORE the snapshot CAS — the barrier for side work that
@@ -718,33 +715,26 @@ class MergeTable:
         batch with the quarantine rows lost). An exception from it aborts
         the commit (attempt files are dead weight, GC'able).
 
-        ``dedup_in_batch=False`` + ``bucket_shuffle=False`` is the
-        shuffle-free fast path: the batch is written as-is, partitioned by
-        bucket directory but NOT exchanged (each task writes a file per
-        bucket it holds). Read-time LWW resolution already handles
-        duplicates and ordering, so correctness is unchanged; the trade is
-        more, smaller delta files — bounded by compaction cadence. This
-        makes the apply a narrow read->decode->write pipeline with zero
-        shuffle, the near-linearly-scaling shape.
+        The write path is source -> bucketed APPEND of rows + tombstones,
+        one Spark job with NO shuffle: the batch is partitioned by bucket
+        directory but not exchanged (each task writes a file per bucket it
+        holds), and in-batch duplicates are written as they are. No
+        target-side scan, no join, no rewrite of carried rows — bytes
+        written per batch are O(batch), not O(table). This is the
+        write-optimized half of the Hudi/Paimon MOR trade: readers resolve
+        LWW across base + deltas (``read`` does a global dedupe per
+        bucket), and ``compact`` folds deltas back into one resolved file
+        set per bucket, so the cost of the trade is more, smaller delta
+        files, bounded by the compaction cadence.
 
-        ``write_coalesce`` (fast path only): merge the batch into this
-        many write tasks via ``coalesce`` — NOT a shuffle; partitions are
-        concatenated in place, so the no-Exchange contract holds. Every
-        write task emits one file per bucket it holds, and a hash-spread
-        batch puts every bucket in every task, so delta files per batch
-        are ``tasks × n_buckets`` regardless of row count — scan-width
-        write parallelism is pure file-count amplification. The caller
-        sizes this from the batch's row count (r6; measured 2x on the
-        1M-event apply: per-file overhead amortizes ~5x while the
-        two-in-flight batch overlap back-fills the narrower write).
-
-        The write path is decode-output -> in-batch LWW dedup (one shuffle)
-        -> bucketed APPEND of rows + tombstones. No target-side scan, no
-        join, no rewrite of carried rows — bytes written per batch are
-        O(batch), not O(table). This is the write-optimized half of the
-        Hudi/Paimon MOR trade: readers resolve LWW across base + deltas
-        (``read`` does a global dedupe per bucket), and ``compact`` folds
-        deltas back into one resolved file set per bucket.
+        ``write_coalesce``: merge the batch into this many write tasks via
+        ``coalesce`` — NOT a shuffle; partitions are concatenated in
+        place. Every write task emits one file per bucket it holds, and a
+        hash-spread batch puts every bucket in every task, so delta files
+        per batch are ``tasks × n_buckets`` regardless of row count —
+        scan-width write parallelism is pure file-count amplification. The
+        caller sizes this from the batch's row count (r6; measured 2x on
+        the 1M-event apply). None writes at scan width.
 
         Conditional-LWW and tombstone semantics are identical to the COW
         ``merge`` by construction: the version-ordered dedupe at read time
@@ -760,7 +750,7 @@ class MergeTable:
             f"merge_mor({batch_id!r})",
             lambda: self._merge_mor_attempt(
                 source, batch_id, op_col, delete_value, evolve_schema,
-                dedup_in_batch, bucket_shuffle, write_coalesce, pre_commit))
+                write_coalesce, pre_commit))
 
     def _merge_mor_attempt(
         self,
@@ -769,8 +759,6 @@ class MergeTable:
         op_col: str | None,
         delete_value: str,
         evolve_schema: bool,
-        dedup_in_batch: bool,
-        bucket_shuffle: bool,
         write_coalesce: int | None = None,
         pre_commit=None,
     ) -> MergeMetrics:
@@ -778,8 +766,6 @@ class MergeTable:
         if self.is_committed(batch_id, snap):
             return MergeMetrics(batch_id=batch_id, version=snap["version"],
                                 skipped_already_committed=True)
-        key_cols = snap["key_cols"]
-        version_cols = snap["version_cols"]
         has_op = op_col is not None and op_col in source.columns
         if evolve_schema:
             data_schema = T.StructType(
@@ -789,12 +775,7 @@ class MergeTable:
             snap, _ = self._evolve_schema(snap, data_schema)
         target_schema = self.schema(snap)
 
-        from ..operators.lww import dedupe_lww
-
-        src = source
-        if dedup_in_batch:
-            src = dedupe_lww(src, key_cols, version_cols)
-        src = src.withColumn(
+        src = source.withColumn(
             _DELETED_COL,
             (F.col(op_col) == F.lit(delete_value)) if has_op else F.lit(False),
         )
@@ -804,14 +785,11 @@ class MergeTable:
                          + [T.StructField(_DELETED_COL, T.BooleanType(), True)]),
         )
         src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap))
+        if write_coalesce:
+            src = src.coalesce(max(1, int(write_coalesce)))
 
         rel_dir = self._attempt_dir(snap)
         out_dir = os.path.join(self.root, rel_dir)
-        if bucket_shuffle:
-            n_parts = min(max(snap["n_buckets"], 1), 256)
-            src = src.repartition(n_parts, F.col(_BUCKET_COL))
-        elif write_coalesce:
-            src = src.coalesce(max(1, int(write_coalesce)))
         src.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(out_dir)
 
         written = self._list_written(out_dir, rel_dir)
@@ -1083,6 +1061,10 @@ class MergeTable:
                 for r in src.select(_BUCKET_COL).distinct().collect()
             )
         if not touched:
+            # an all-invalid batch commits nothing but its id: its
+            # quarantine rows must still be durable before the flip
+            if pre_commit is not None:
+                pre_commit()
             new_snap, skipped = self._cas_commit(snap, batch_id, [], set())
             return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
                                 skipped_already_committed=skipped)

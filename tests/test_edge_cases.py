@@ -48,3 +48,70 @@ def test_all_corrupt_batch_goes_entirely_to_quarantine(spark, tmpdir_path):
     assert res[0]["n_quarantined"] == res[0]["n_in"] > 0
     assert p.table.read().count() == 0
     assert p.quarantine().count() == res[0]["n_in"]
+
+
+def _fail_quarantine_writes(monkeypatch):
+    """Make every parquet write into a quarantine dir raise."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        if "/quarantine/" in path:
+            raise OSError("injected quarantine write failure")
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def test_all_corrupt_cow_batch_waits_for_durable_quarantine(
+        spark, tmpdir_path, monkeypatch):
+    """An all-invalid COW batch touches no bucket, so its commit carries
+    only the batch id. It must still wait for its quarantine write: if
+    that write fails the batch must not commit, and a rerun parks the
+    rows (a committed id would be skipped forever, losing them)."""
+    import pytest
+
+    wal = f"{tmpdir_path}/wal"
+    generate_wal(spark, n_keys=30).withColumn(
+        "payload", F.substring(F.col("payload"), 1, 6)).write.parquet(wal)
+    p = build(spark, tmpdir_path, wal)
+    lo, hi = p.delivery_range()
+    with monkeypatch.context() as mp:
+        _fail_quarantine_writes(mp)
+        with pytest.raises(OSError, match="injected"):
+            p.run_batch(lo - 1, hi)
+    bid = p.batch_id_for(p.pipeline, lo - 1, hi)
+    assert not p.table.is_committed(bid)
+    assert p.checkpoints.get(p.pipeline) < hi
+
+    rec = p.run_batch(lo - 1, hi)
+    assert p.table.is_committed(bid)
+    assert p.quarantine().count() == rec["n_quarantined"] == rec["n_in"] > 0
+
+
+def test_skipped_merge_still_surfaces_quarantine_failure(
+        spark, tmpdir_path, monkeypatch):
+    """A merge that finds its batch already committed (a concurrent writer
+    won) never reaches the pre-commit barrier; run_batch must still await
+    the quarantine write and raise its error."""
+    import pytest
+
+    wal = f"{tmpdir_path}/wal"
+    generate_wal(spark, n_keys=30).withColumn(
+        "payload", F.substring(F.col("payload"), 1, 6)).write.parquet(wal)
+    p = build(spark, tmpdir_path, wal)
+    lo, hi = p.delivery_range()
+    p.run_batch(lo - 1, hi)
+    # the pipeline's own is_committed check misses the commit once, as if
+    # a peer committed between it and the merge
+    real = p.table.is_committed
+    calls = []
+    monkeypatch.setattr(p.table, "is_committed",
+                        lambda b, snap=None: bool(calls.append(b)) or
+                        (len(calls) > 1 and real(b, snap)))
+    with monkeypatch.context() as mp:
+        _fail_quarantine_writes(mp)
+        with pytest.raises(OSError, match="injected"):
+            p.run_batch(lo - 1, hi)
+    assert len(calls) >= 2  # the merge saw the committed id

@@ -112,7 +112,7 @@ def test_mor_write_amplification_is_o_batch(spark, tmpdir_path, wal):
 
 
 def test_fastpath_append_width_tracks_batch_rows(spark, tmpdir_path, wal):
-    """r6: the fast-path delta append is coalesced to ceil(batch_rows /
+    """r6: the MOR delta append is coalesced to ceil(batch_rows /
     mor_append_rows_per_task) write tasks — delta files per batch are
     width x touched buckets instead of scan-width x buckets (measured 2x
     on the 1M-event apply), with NO Exchange (coalesce concatenates
@@ -120,10 +120,10 @@ def test_fastpath_append_width_tracks_batch_rows(spark, tmpdir_path, wal):
     path."""
     import glob
 
-    wide = build(spark, tmpdir_path + "/w", wal, mor_fast_path=True,
+    wide = build(spark, tmpdir_path + "/w", wal,
                  mor_append_rows_per_task=None)  # disabled -> scan width
     wide.run(batch_span=None)
-    narrow = build(spark, tmpdir_path + "/n", wal, mor_fast_path=True,
+    narrow = build(spark, tmpdir_path + "/n", wal,
                    mor_append_rows_per_task=10**9)  # one write task
     narrow.run(batch_span=None)
 

@@ -218,7 +218,7 @@ def test_pipelined_run_matches_sequential(spark, tmpdir_path, wal):
 
 
 def test_concurrent_mor_batches_match_sequential(spark, tmpdir_path, wal):
-    """r6: the MOR fast path runs two delta-append batches in flight (the
+    """r6: MOR runs two delta-append batches in flight (the
     >=16-slot default; forced here by patching the slot check is not
     needed — exercise the worker path directly via run_batch +
     update_global_hwm=False then compare to a sequential run)."""
@@ -230,7 +230,7 @@ def test_concurrent_mor_batches_match_sequential(spark, tmpdir_path, wal):
             key_cols=["repo", "path"],
             version_cols=["commit_seq", "event_seq"], n_buckets=8)
         return CdcApplyPipeline(spark, wal, tbl, f"{tmpdir_path}/{sub}/state",
-                                mode="mor", mor_fast_path=True)
+                                mode="mor")
 
     seq = make("seq")
     lo, hi = seq.delivery_range()

@@ -248,7 +248,7 @@ def test_compact_depth_policy_bounds_read_amplification(spark, tmpdir_path):
     )
     p = CdcApplyPipeline(spark, wal, tbl, f"{tmpdir_path}/state",
                          collect_metrics=False, mode="mor",
-                         mor_fast_path=True, compact_depth=2)
+                         compact_depth=2)
     lo, hi = p.delivery_range()
     p.run(batch_span=max(1, (hi - lo) // 6))
     assert tbl.delta_depth() <= 2
