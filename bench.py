@@ -193,7 +193,7 @@ def _make_pipeline(spark, wal_dir: str, work_dir: str, n_buckets: int = 64,
         n_buckets=n_buckets,
     )
     return CdcApplyPipeline(spark, wal_dir, tbl, f"{work_dir}/state",
-                            collect_metrics=False, mode=mode)
+                            mode=mode)
 
 
 def warmup_apply(spark, work_dir: str) -> None:
@@ -303,8 +303,7 @@ def run_incremental(spark, wal_dir: str, work_dir: str, n_keys: int) -> dict:
         shutil.copytree(f"{base_dir}/target", tdir)
         p = CdcApplyPipeline(spark, delta_path,
                              MergeTable.load(spark, tdir),
-                             f"{work_dir}/inc_{mode}_state",
-                             collect_metrics=False, mode=mode)
+                             f"{work_dir}/inc_{mode}_state", mode=mode)
         lo, hi = p.delivery_range()
         t0 = time.time()
         p.run_batch(lo - 1, hi)

@@ -6,9 +6,8 @@ schema, batch shape, partition-friendly ``mapInPandas`` signatures, header
 sniffing, frame-sample planning — while the actual codec work (image
 decode/resize, audio resample, video frame extraction) is STUBBED: the
 codec libraries (PIL/ffmpeg/torchaudio) are not in this container, so each
-stub either computes a deterministic fake (documented) or raises
-``NotImplementedError`` at the single clearly-marked seam where the real
-decoder plugs in.
+stub computes a deterministic fake (documented) at the clearly-marked seam
+where the real decoder plugs in; video frame extraction stops at the plan.
 
 Design notes for scale:
 - media bytes stay in Arrow record batches end-to-end (mapInPandas), never
@@ -147,7 +146,7 @@ def sample_frames_plan(df: DataFrame, duration_col: str = "duration_s",
 
     The *plan* is pure Spark (sequence + explode — scales, no Python); the
     actual frame grab would consume (media, frame_ts) via mapInPandas with
-    an ffmpeg-style decoder (NotImplementedError seam below).
+    an ffmpeg-style decoder, which this container does not have.
     """
     # sequence() is integral-only: generate frame indices, scale to seconds
     # (explode must be a top-level projection, so two steps)
@@ -159,12 +158,4 @@ def sample_frames_plan(df: DataFrame, duration_col: str = "duration_s",
         )
         .withColumn("frame_ts", F.col("_frame_idx") * F.lit(float(every_s)))
         .drop("_frame_idx")
-    )
-
-
-def grab_frames_stub(df: DataFrame) -> DataFrame:
-    """Seam for the real video decoder. Raises by design (no codec here)."""
-    raise NotImplementedError(
-        "video frame extraction requires an ffmpeg-backed decoder; "
-        "wire it into mapInPandas over (media, frame_ts) batches"
     )

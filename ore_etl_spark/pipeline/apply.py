@@ -91,7 +91,6 @@ class CdcApplyPipeline:
         state_dir: str,
         pipeline: str = "cdc_apply",
         optional_cols: tuple[str, ...] = ("size_bytes",),
-        collect_metrics: bool = True,
         mode: str = "cow",
         compact_every: int | None = None,
         compact_depth: int | None = None,
@@ -118,7 +117,7 @@ class CdcApplyPipeline:
         # a field — from_debezium passes it through) is read with this
         # wider schema; list the new column in ``optional_cols`` and the
         # MERGE lands it in the target additively (int→long widening via
-        # MergeTable._evolve_schema). None = the engine's base WAL schema.
+        # MergeTable._evolved). None = the engine's base WAL schema.
         # For events_format="kafka" (an archived broker record dump,
         # sources/kafka.py) this is the ENVELOPE schema instead — extras
         # ride in the after-image and surface through from_debezium.
@@ -132,7 +131,6 @@ class CdcApplyPipeline:
         self.table = table
         self.pipeline = pipeline
         self.optional_cols = optional_cols
-        self.collect_metrics = collect_metrics
         self.mode = mode
         self.compact_every = compact_every
         self.compact_depth = compact_depth
@@ -484,7 +482,6 @@ class CdcApplyPipeline:
                     self._batches_since_compact = 0
             else:
                 m = self.table.merge(valid, batch_id, touched_buckets=touched,
-                                     collect_metrics=self.collect_metrics,
                                      pre_commit=pre_commit)
         finally:
             if qpool is not None:
@@ -560,8 +557,7 @@ class CdcApplyPipeline:
                 for r in part_stats
             ],
         }
-        if self.collect_metrics:
-            self.metrics.append(rec)
+        self.metrics.append(rec)
         return rec
 
     # ------------------------------------------------------------------
@@ -727,8 +723,7 @@ class CdcApplyPipeline:
             if self.mode == "mor":
                 self.table.merge_mor(recovered, batch_id)
             else:
-                self.table.merge(recovered, batch_id,
-                                 collect_metrics=self.collect_metrics)
+                self.table.merge(recovered, batch_id)
 
         # 2) rewrite the quarantine generation: still-failing rows bump
         #    attempts (dead-letter at the cap), dead rows carry over
@@ -759,6 +754,5 @@ class CdcApplyPipeline:
         shutil.rmtree(old, ignore_errors=True)
         rec = {"n_recovered": n_rec, "n_still_failed": n_still,
                "n_dead": n_dead, "batch_id": batch_id}
-        if self.collect_metrics:
-            self.metrics.append({"redrive": True, **rec})
+        self.metrics.append({"redrive": True, **rec})
         return rec

@@ -140,7 +140,7 @@ def from_debezium(envelopes: DataFrame) -> DataFrame:
     (/root/reference/src/types/schemas.ts:10), where an upstream ALTER
     TABLE simply starts shipping a new ``after`` field. Downstream,
     ``CdcApplyPipeline(optional_cols=...)`` forwards present extras into
-    the MERGE and ``MergeTable._evolve_schema`` lands them additively
+    the MERGE and ``MergeTable._evolved`` lands them additively
     (and widens int→long etc.) — so a new wire column reaches the target
     table without a code change, instead of being silently dropped.
     """

@@ -71,14 +71,22 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _BUCKET_COL = "_bucket"
 _DELETED_COL = "_deleted"
+# source rows whose _OP_COL equals _DELETE_OP become tombstones
+_OP_COL = "op"
+_DELETE_OP = "DELETE"
+# merge-internal per-row outcome, observed on the bucket write (never
+# written): inserted, updated (a winning delete included), or stale source
+# row; carried target rows are NULL
+_ACTION_COL = "_action"
+_INSERT, _UPDATE, _STALE = 1, 2, 3
 # merge-internal struct-of-key-columns join key (never written): the LWW
 # dedup groups by it and the resolve join joins on it, sharing one exchange
 _JK_COL = "_jk"
@@ -187,7 +195,6 @@ def keys_eq_null_safe(alias_a: str, alias_b: str, cols: list[str]):
 class MergeMetrics:
     batch_id: str
     version: int
-    n_source: int = 0
     n_inserted: int = 0
     n_updated: int = 0
     n_stale_ignored: int = 0
@@ -335,12 +342,10 @@ class MergeTable:
         return df.select(*cols)
 
     def _read_refs(self, snap: dict, refs: list[dict], with_deleted: bool) -> DataFrame:
-        target = self.schema(snap)
-        full = T.StructType(
-            target.fields + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-        )
+        full = self._stored_schema(snap)
         if not refs:
-            return self.spark.createDataFrame([], full if with_deleted else target)
+            return self.spark.createDataFrame(
+                [], full if with_deleted else self.schema(snap))
         by_schema: dict[str, list[str]] = {}
         for r in refs:
             by_schema.setdefault(r["schema_id"], []).append(
@@ -659,14 +664,17 @@ class MergeTable:
         ).cast("int")
 
     # ---------------------------------------------------------------- write
-    def _evolve_schema(self, snap: dict, src_schema: T.StructType) -> tuple[dict, bool]:
-        """Additive columns + type widening; returns (snap, changed)."""
+    def _evolved(self, snap: dict, source: DataFrame) -> dict:
+        """``snap`` with its schema evolved to take ``source``'s data
+        columns (every column but ``op`` and ``_``-internals): additive
+        columns + type widening. A change no widening covers — a key column
+        included — raises ValueError before anything is written."""
         cur = self.schema(snap)
         fields = list(cur.fields)
         names = {f.name: i for i, f in enumerate(fields)}
         changed = False
-        for f in src_schema.fields:
-            if f.name.startswith("_"):
+        for f in source.schema.fields:
+            if f.name == _OP_COL or f.name.startswith("_"):
                 continue
             if f.name not in names:
                 fields.append(T.StructField(f.name, f.dataType, True))
@@ -692,28 +700,55 @@ class MergeTable:
             snap["schemas"] = dict(snap["schemas"])
             snap["schemas"][new_id] = T.StructType(fields).json()
             snap["current_schema_id"] = new_id
-        return snap, changed
+        return snap
+
+    def _stored_schema(self, snap: dict) -> T.StructType:
+        """The table schema as written to files: data columns + tombstone
+        flag."""
+        return T.StructType(self.schema(snap).fields
+                            + [T.StructField(_DELETED_COL, T.BooleanType(), True)])
+
+    @staticmethod
+    def _tombstoned(df: DataFrame) -> DataFrame:
+        """Rows whose ``op`` is DELETE become tombstones."""
+        return df.withColumn(
+            _DELETED_COL,
+            (F.col(_OP_COL) == F.lit(_DELETE_OP)) if _OP_COL in df.columns
+            else F.lit(False))
+
+    def _sorted_by_bucket(self, snap: dict, df: DataFrame, width: int) -> DataFrame:
+        """Full-rewrite layout: one task per bucket (up to 256), rows
+        sorted by ``stats_cols`` within each bucket (Iceberg sort-order
+        parity: sorted data gives parquet row-group pruning real bite)."""
+        out = df.withColumn(_BUCKET_COL, self.bucket_expr(snap)).repartition(
+            min(max(width, 1), 256), F.col(_BUCKET_COL))
+        sort_cols = [c for c in (snap.get("stats_cols") or []) if c in df.columns]
+        if sort_cols:
+            out = out.sortWithinPartitions(_BUCKET_COL, *sort_cols)
+        return out
 
     # ----------------------------------------------------------- MOR write
     def merge_mor(
         self,
         source: DataFrame,
         batch_id: str,
-        op_col: str | None = "op",
-        delete_value: str = "DELETE",
-        evolve_schema: bool = True,
         write_coalesce: int | None = None,
         pre_commit=None,
     ) -> MergeMetrics:
         """Merge-on-read upsert: append delta files, resolve at read.
+
+        ``source`` rows whose ``op`` column is ``DELETE`` become
+        tombstones. New columns and widened types evolve the table schema;
+        a type change no widening covers raises ``ValueError``.
 
         ``pre_commit``: optional zero-arg callable invoked after the data
         write but BEFORE the snapshot CAS — the barrier for side work that
         must be durable before the batch becomes visible (the apply
         pipeline overlaps its quarantine write with the append and joins
         it here; committing first would let an idempotent replay skip the
-        batch with the quarantine rows lost). An exception from it aborts
-        the commit (attempt files are dead weight, GC'able).
+        batch with the quarantine rows lost). It runs on every commit path,
+        a zero-row batch included. An exception from it aborts the commit
+        (attempt files are dead weight, GC'able).
 
         The write path is source -> bucketed APPEND of rows + tombstones,
         one Spark job with NO shuffle: the batch is partitioned by bucket
@@ -725,7 +760,9 @@ class MergeTable:
         LWW across base + deltas (``read`` does a global dedupe per
         bucket), and ``compact`` folds deltas back into one resolved file
         set per bucket, so the cost of the trade is more, smaller delta
-        files, bounded by the compaction cadence.
+        files, bounded by the compaction cadence. The returned metrics
+        carry only ``n_buckets_touched``: row outcomes are decided at read
+        time, so the append cannot count them.
 
         ``write_coalesce``: merge the batch into this many write tasks via
         ``coalesce`` — NOT a shuffle; partitions are concatenated in
@@ -746,66 +783,16 @@ class MergeTable:
         advanced snapshot unconditionally (read-time LWW resolves
         overlaps) — only diverged schema evolution forces a recompute.
         """
-        return self._commit_with_retries(
-            f"merge_mor({batch_id!r})",
-            lambda: self._merge_mor_attempt(
-                source, batch_id, op_col, delete_value, evolve_schema,
-                write_coalesce, pre_commit))
+        def attempt(snap: dict) -> MergeMetrics:
+            snap = self._evolved(snap, source)
+            src = self._align(self._tombstoned(source), self._stored_schema(snap))
+            src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap))
+            if write_coalesce:
+                src = src.coalesce(max(1, int(write_coalesce)))
+            return self._write_and_commit(snap, batch_id, src, None,
+                                          pre_commit=pre_commit)
 
-    def _merge_mor_attempt(
-        self,
-        source: DataFrame,
-        batch_id: str,
-        op_col: str | None,
-        delete_value: str,
-        evolve_schema: bool,
-        write_coalesce: int | None = None,
-        pre_commit=None,
-    ) -> MergeMetrics:
-        snap = self.snapshot()
-        if self.is_committed(batch_id, snap):
-            return MergeMetrics(batch_id=batch_id, version=snap["version"],
-                                skipped_already_committed=True)
-        has_op = op_col is not None and op_col in source.columns
-        if evolve_schema:
-            data_schema = T.StructType(
-                [f for f in source.schema.fields
-                 if f.name != op_col and not f.name.startswith("_")]
-            )
-            snap, _ = self._evolve_schema(snap, data_schema)
-        target_schema = self.schema(snap)
-
-        src = source.withColumn(
-            _DELETED_COL,
-            (F.col(op_col) == F.lit(delete_value)) if has_op else F.lit(False),
-        )
-        src = self._align(
-            src,
-            T.StructType(target_schema.fields
-                         + [T.StructField(_DELETED_COL, T.BooleanType(), True)]),
-        )
-        src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap))
-        if write_coalesce:
-            src = src.coalesce(max(1, int(write_coalesce)))
-
-        rel_dir = self._attempt_dir(snap)
-        out_dir = os.path.join(self.root, rel_dir)
-        src.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(out_dir)
-
-        written = self._list_written(out_dir, rel_dir)
-        if pre_commit is not None:
-            pre_commit()  # must be durable before the snapshot flips
-
-        # delta semantics: APPEND refs (never drop prior refs)
-        new_snap, skipped = self._cas_commit(
-            snap, batch_id, self._make_refs(snap, written, delta=True), None)
-        if skipped:
-            return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                                skipped_already_committed=True)
-        m = MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                         n_buckets_touched=len(written))
-        self._append_lineage(self._lineage_rows(batch_id, m.version, m))
-        return m
+        return self._commit_with_retries("merge_mor", batch_id, attempt)
 
     def has_deltas(self, snap: dict | None = None) -> bool:
         snap = snap or self.snapshot()
@@ -834,55 +821,23 @@ class MergeTable:
         and with ``rows_per_file`` set, each bucket splits into several
         range-disjoint files whose per-file footer bounds let
         ``read_where`` open O(1) files per bucket for a narrow range."""
-        return self._commit_with_retries(
-            f"compact({batch_id!r})",
-            lambda: self._compact_attempt(batch_id, retain_tombstones,
-                                          rows_per_file))
-
-    def _compact_attempt(self, batch_id: str, retain_tombstones: bool,
-                         rows_per_file: int | None = None) -> MergeMetrics:
-        snap = self.snapshot()
-        if self.is_committed(batch_id, snap):
-            return MergeMetrics(batch_id=batch_id, version=snap["version"],
-                                skipped_already_committed=True)
-        if retain_tombstones:
-            dirty = {r["bucket"] for r in snap["refs"] if r.get("delta")}
-        else:
-            dirty = {r["bucket"] for r in snap["refs"]}
-        if not dirty:
-            new_snap, skipped = self._cas_commit(snap, batch_id, [], set())
-            return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                                skipped_already_committed=skipped)
-        refs = [r for r in snap["refs"] if r["bucket"] in dirty]
-        resolved = self._read_refs(snap, refs, with_deleted=True)
         from ..operators.lww import dedupe_lww
 
-        resolved = dedupe_lww(resolved, snap["key_cols"], snap["version_cols"])
-        if not retain_tombstones:
-            resolved = resolved.filter(~F.col(_DELETED_COL))
-        resolved = resolved.withColumn(_BUCKET_COL, self.bucket_expr(snap))
-        rel_dir = self._attempt_dir(snap)
-        out_dir = os.path.join(self.root, rel_dir)
-        out = resolved.repartition(min(max(len(dirty), 1), 256),
-                                   F.col(_BUCKET_COL))
-        sort_cols = [c for c in (snap.get("stats_cols") or [])
-                     if c in resolved.columns]
-        if sort_cols:
-            out = out.sortWithinPartitions(_BUCKET_COL, *sort_cols)
-        writer = out.write.partitionBy(_BUCKET_COL).mode("overwrite")
-        if rows_per_file:
-            writer = writer.option("maxRecordsPerFile", int(rows_per_file))
-        writer.parquet(out_dir)
-        written = self._list_written(out_dir, rel_dir)
-        new_snap, skipped = self._cas_commit(
-            snap, batch_id, self._make_refs(snap, written), dirty)
-        if skipped:
-            return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                                skipped_already_committed=True)
-        m = MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                         n_buckets_touched=len(written))
-        self._append_lineage(self._lineage_rows(batch_id, m.version, m))
-        return m
+        def attempt(snap: dict) -> MergeMetrics:
+            dirty = {r["bucket"] for r in snap["refs"]
+                     if r.get("delta") or not retain_tombstones}
+            if not dirty:
+                return self._write_and_commit(snap, batch_id, None, set())
+            refs = [r for r in snap["refs"] if r["bucket"] in dirty]
+            resolved = dedupe_lww(self._read_refs(snap, refs, with_deleted=True),
+                                  snap["key_cols"], snap["version_cols"])
+            if not retain_tombstones:
+                resolved = resolved.filter(~F.col(_DELETED_COL))
+            return self._write_and_commit(
+                snap, batch_id, self._sorted_by_bucket(snap, resolved, len(dirty)),
+                dirty, rows_per_file=rows_per_file)
+
+        return self._commit_with_retries("compact", batch_id, attempt)
 
     def rebucket(self, n_buckets: int, batch_id: str) -> MergeMetrics:
         """Bucket-spec evolution (Iceberg partition-spec-evolution analog):
@@ -897,302 +852,274 @@ class MergeTable:
         snapshots' own n_buckets. Idempotent by batch_id. A global
         restructure commits EXCLUSIVELY — it never rebases; racing with any
         concurrent commit recomputes from the fresh snapshot."""
-        return self._commit_with_retries(
-            f"rebucket({batch_id!r})",
-            lambda: self._rebucket_attempt(n_buckets, batch_id))
-
-    def _rebucket_attempt(self, n_buckets: int, batch_id: str) -> MergeMetrics:
-        snap = self.snapshot()
-        if self.is_committed(batch_id, snap):
-            return MergeMetrics(batch_id=batch_id, version=snap["version"],
-                                skipped_already_committed=True)
-        # raw refs read + ONE LWW resolution (read() would already resolve
-        # deltas; resolving twice doubles the most expensive stage)
-        resolved = self._read_refs(snap, snap["refs"], with_deleted=True)
         from ..operators.lww import dedupe_lww
 
-        if self.has_deltas(snap):
-            resolved = dedupe_lww(resolved, snap["key_cols"], snap["version_cols"])
-        old_buckets = {r["bucket"] for r in snap["refs"]}
-        snap = {**snap, "n_buckets": int(n_buckets)}
-        resolved = resolved.withColumn(_BUCKET_COL, self.bucket_expr(snap))
-        rel_dir = self._attempt_dir(snap)
-        out_dir = os.path.join(self.root, rel_dir)
-        out = resolved.repartition(min(int(n_buckets), 256), F.col(_BUCKET_COL))
-        sort_cols = [c for c in (snap.get("stats_cols") or [])
-                     if c in resolved.columns]
-        if sort_cols:  # Iceberg sort-order parity on full rewrites too
-            out = out.sortWithinPartitions(_BUCKET_COL, *sort_cols)
-        out.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(out_dir)
-        written = self._list_written(out_dir, rel_dir)
-        new_snap, skipped = self._cas_commit(
-            snap, batch_id, self._make_refs(snap, written), old_buckets,
-            exclusive=True)
-        if skipped:
-            return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                                skipped_already_committed=True)
-        m = MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                         n_buckets_touched=len(written))
-        self._append_lineage(self._lineage_rows(batch_id, m.version, m))
-        return m
+        def attempt(snap: dict) -> MergeMetrics:
+            # raw refs read + ONE LWW resolution (read() would already
+            # resolve deltas; resolving twice doubles the most expensive
+            # stage)
+            resolved = self._read_refs(snap, snap["refs"], with_deleted=True)
+            if self.has_deltas(snap):
+                resolved = dedupe_lww(resolved, snap["key_cols"], snap["version_cols"])
+            old_buckets = {r["bucket"] for r in snap["refs"]}
+            snap = {**snap, "n_buckets": int(n_buckets)}
+            return self._write_and_commit(
+                snap, batch_id, self._sorted_by_bucket(snap, resolved, int(n_buckets)),
+                old_buckets, exclusive=True)
+
+        return self._commit_with_retries("rebucket", batch_id, attempt)
 
     def merge(
         self,
         source: DataFrame,
         batch_id: str,
-        op_col: str | None = "op",
-        delete_value: str = "DELETE",
-        evolve_schema: bool = True,
-        collect_metrics: bool = True,
         touched_buckets: list[int] | None = None,
         pre_commit=None,
     ) -> MergeMetrics:
         """Conditional-LWW MERGE of `source` into the table.
 
-        ``pre_commit``: zero-arg callable run after the bucket write,
-        before the snapshot CAS (see ``merge_mor`` — the quarantine-write
-        overlap barrier).
-
         `source` must contain key + version columns; duplicates per key are
         resolved first (in-batch LWW — mandatory before any keyed merge,
-        mirroring SURVEY A7). If `op_col` is present, rows whose op equals
-        `delete_value` become tombstones. Idempotent by `batch_id`.
+        mirroring SURVEY A7). Rows whose ``op`` column is ``DELETE`` become
+        tombstones. New columns and widened types evolve the table schema;
+        a type change no widening covers (key columns included) raises
+        ``ValueError`` before anything is written. Idempotent by `batch_id`.
+
+        The returned insert/update/stale/delete counts (and the lineage
+        row) are observed on the bucket write itself (``DataFrame.observe``
+        in the write's result stage): no extra Spark job, no cached frame.
+
+        ``pre_commit``: zero-arg callable run after the bucket write,
+        before the snapshot CAS (see ``merge_mor`` — the quarantine-write
+        overlap barrier). It runs on every commit path, including the
+        id-only commit of a batch that touches no bucket.
 
         ``touched_buckets``: pass the batch's bucket set if the caller
         already knows it (the apply pipeline computes it in its stats pass)
         — saves one job. It must be a SUPERSET of the source's buckets:
         source rows in an un-declared bucket would land in a new file while
         the old refs for that bucket are retained — silent key duplication
-        that read() would not resolve (no delta flag). The write-back below
-        verifies this and raises before the snapshot flips.
+        that read() would not resolve (no delta flag). The commit verifies
+        this and raises before the snapshot flips.
 
         Multi-writer safe: the commit is published via ``_cas_commit``; on
         a bucket-overlap conflict the whole merge recomputes against the
         fresh snapshot (bounded retries).
         """
-        return self._commit_with_retries(
-            f"merge({batch_id!r})",
-            lambda: self._merge_attempt(
-                source, batch_id, op_col, delete_value, evolve_schema,
-                collect_metrics, touched_buckets, pre_commit))
-
-    def _merge_attempt(
-        self,
-        source: DataFrame,
-        batch_id: str,
-        op_col: str | None,
-        delete_value: str,
-        evolve_schema: bool,
-        collect_metrics: bool,
-        touched_buckets: list[int] | None,
-        pre_commit=None,
-    ) -> MergeMetrics:
-        snap = self.snapshot()
-        if self.is_committed(batch_id, snap):
-            return MergeMetrics(batch_id=batch_id, version=snap["version"],
-                                skipped_already_committed=True)
-
-        key_cols = snap["key_cols"]
-        version_cols = snap["version_cols"]
-        has_op = op_col is not None and op_col in source.columns
-
-        if evolve_schema:
-            data_schema = T.StructType(
-                [f for f in source.schema.fields
-                 if f.name != op_col and not f.name.startswith("_")]
-            )
-            snap, _ = self._evolve_schema(snap, data_schema)
-        target_schema = self.schema(snap)
-
-        # --- in-batch LWW dedup (one survivor per key) -------------------
-        # r6 (guide §2.4: share one exchange): the dedup groups by a
-        # single STRUCT of the key columns (struct equality/grouping is
-        # per-field null-safe, so the groups — and the surviving rows —
-        # are identical to dedupe_lww's multi-column form), the struct
-        # rides through the alignment as a pass-through column, and the
-        # resolve join below joins ON that struct attribute with plain
-        # equality. The old shape joined with per-column eqNullSafe, which
-        # Spark rewrites to (coalesce(k, default), isnull(k)) join keys —
-        # derived expressions the dedup's hash partitioning can never
-        # satisfy, so the whole deduped batch re-shuffled AND re-sorted
-        # between the aggregate and the join. With the struct as both the
-        # grouping attribute and the join key, EnsureRequirements reuses
-        # the dedup's exchange and the sort-aggregate's ordering: one
-        # full Exchange + Sort of the batch payload removed per merge.
         from ..operators.lww import dedupe_lww
 
-        payload = [f.name for f in source.schema.fields]
-        packed = F.struct(
-            *[F.col(c).alias(f"_v{i}") for i, c in enumerate(version_cols)],
-            F.struct(*payload).alias("_row"),
-        )
-        src = (
-            source.groupBy(
-                F.struct(*[F.col(c) for c in key_cols]).alias(_JK_COL))
-            .agg(F.max(packed).alias("_win"))
-            .select(F.col(_JK_COL),
-                    *[F.col(f"_win._row.{c}").alias(c) for c in payload])
-        )
-        src = src.withColumn(
-            _DELETED_COL,
-            (F.col(op_col) == F.lit(delete_value)) if has_op else F.lit(False),
-        )
-        # the align target carries _JK_COL with src's OWN struct type so
-        # _align passes the attribute through uncast (a cast would break
-        # the partitioning's expression identity and re-introduce the
-        # exchange); when key-column types differ across sides (key-type
-        # widening), the join inserts the cast instead — correct either
-        # way, the reuse is just lost for that rare batch
-        jk_field = src.schema[_JK_COL]
-        src = self._align(
-            src,
-            T.StructType(target_schema.fields
-                         + [T.StructField(_DELETED_COL, T.BooleanType(), True),
-                            jk_field]),
-        )
-        src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap))
+        def attempt(snap: dict) -> MergeMetrics:
+            snap = self._evolved(snap, source)
+            key_cols = snap["key_cols"]
+            version_cols = snap["version_cols"]
 
-        # --- bucket pruning ----------------------------------------------
-        if touched_buckets is not None:
-            touched = sorted(touched_buckets)
-        else:
-            touched = sorted(
-                r[_BUCKET_COL]
-                for r in src.select(_BUCKET_COL).distinct().collect()
+            # --- in-batch LWW dedup (one survivor per key) ---------------
+            # r6 (guide §2.4: share one exchange): the dedup groups by a
+            # single STRUCT of the key columns (struct equality/grouping is
+            # per-field null-safe, so the groups — and the surviving rows —
+            # are identical to dedupe_lww's multi-column form), the struct
+            # rides through the alignment as a pass-through column, and the
+            # resolve join below joins ON that struct attribute with plain
+            # equality. The old shape joined with per-column eqNullSafe,
+            # which Spark rewrites to (coalesce(k, default), isnull(k)) join
+            # keys — derived expressions the dedup's hash partitioning can
+            # never satisfy, so the whole deduped batch re-shuffled AND
+            # re-sorted between the aggregate and the join. With the struct
+            # as both the grouping attribute and the join key,
+            # EnsureRequirements reuses the dedup's exchange and the
+            # sort-aggregate's ordering: one full Exchange + Sort of the
+            # batch payload removed per merge.
+            payload = source.columns
+            packed = F.struct(
+                *[F.col(c).alias(f"_v{i}") for i, c in enumerate(version_cols)],
+                F.struct(*payload).alias("_row"),
             )
-        if not touched:
-            # an all-invalid batch commits nothing but its id: its
-            # quarantine rows must still be durable before the flip
-            if pre_commit is not None:
-                pre_commit()
-            new_snap, skipped = self._cas_commit(snap, batch_id, [], set())
-            return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                                skipped_already_committed=skipped)
-
-        tgt_refs = [r for r in snap["refs"] if r["bucket"] in set(touched)]
-        tgt = self._read_refs(snap, tgt_refs, with_deleted=True)
-        if self.has_deltas(snap):
-            # unresolved MOR deltas would give >1 target row per key and
-            # explode the outer join — resolve them first
-            tgt = dedupe_lww(tgt, key_cols, version_cols)
-        tgt = tgt.withColumn(_BUCKET_COL, self.bucket_expr(snap))
-        tgt = tgt.withColumn(_JK_COL,
-                             F.struct(*[F.col(c) for c in key_cols]))
-
-        # --- resolve: full outer join on key, conditional LWW ------------
-        # presence markers + null-safe key equality: key columns MAY hold
-        # NULL (e.g. a view table grouped on a nullable column) — deriving
-        # presence from key nullability would mis-classify those rows and
-        # plain equality would never match them. Equality on the key
-        # STRUCT is per-field null-safe (verified: struct(NULL,'x') =
-        # struct(NULL,'x') is true) and lets the join reuse the dedup's
-        # exchange — see the dedup comment above.
-        src = src.withColumn("_s_mark", F.lit(True))
-        tgt = tgt.withColumn("_t_mark", F.lit(True))
-        j = src.alias("s").join(tgt.alias("t"),
-                                F.col(f"s.{_JK_COL}") == F.col(f"t.{_JK_COL}"),
-                                "full_outer")
-
-        s_ver = F.struct(*[F.col(f"s.{c}") for c in version_cols])
-        t_ver = F.struct(*[F.col(f"t.{c}") for c in version_cols])
-        s_present = F.col("s._s_mark").isNotNull()
-        t_present = F.col("t._t_mark").isNotNull()
-        take_src = s_present & (~t_present | (s_ver > t_ver))
-
-        out_cols = [
-            F.when(take_src, F.col(f"s.{f.name}"))
-            .otherwise(F.col(f"t.{f.name}"))
-            .alias(f.name)
-            for f in target_schema.fields
-        ] + [
-            F.when(take_src, F.col(f"s.{_DELETED_COL}"))
-            .otherwise(F.col(f"t.{_DELETED_COL}"))
-            .alias(_DELETED_COL),
-            F.coalesce(F.col(f"s.{_BUCKET_COL}"), F.col(f"t.{_BUCKET_COL}"))
-            .alias(_BUCKET_COL),
-        ]
-        if collect_metrics:
-            out_cols.append(
-                F.when(take_src & ~t_present, F.lit("insert"))
-                .when(take_src & t_present, F.lit("update"))
-                .when(s_present & ~(s_ver > t_ver), F.lit("stale"))
-                .otherwise(F.lit("carry"))
-                .alias("_action")
+            src = self._tombstoned(
+                source.groupBy(
+                    F.struct(*[F.col(c) for c in key_cols]).alias(_JK_COL))
+                .agg(F.max(packed).alias("_win"))
+                .select(F.col(_JK_COL),
+                        *[F.col(f"_win._row.{c}").alias(c) for c in payload])
             )
-        merged = j.select(*out_cols)
+            # the align target carries _JK_COL with src's OWN struct type
+            # so _align passes the attribute through uncast (a cast would
+            # break the partitioning's expression identity and
+            # re-introduce the exchange); when key-column types differ
+            # across sides they can only differ by a lossless widening
+            # (_evolved rejects any other change), and the join inserts
+            # that cast instead — correct, the reuse is just lost for that
+            # rare batch
+            src = self._align(src, self._stored_schema(snap).add(src.schema[_JK_COL]))
+            src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap))
 
-        metrics = MergeMetrics(batch_id=batch_id, version=snap["version"] + 1,
-                               n_buckets_touched=len(touched))
-        if collect_metrics:
-            merged = merged.persist()
-            agg = merged.agg(
-                F.sum(F.when(F.col("_action") == "insert", 1).otherwise(0)).alias("ins"),
-                F.sum(F.when(F.col("_action") == "update", 1).otherwise(0)).alias("upd"),
-                F.sum(F.when(F.col("_action") == "stale", 1).otherwise(0)).alias("stale"),
-                F.sum(
-                    F.when((F.col("_action").isin("insert", "update"))
-                           & F.col(_DELETED_COL), 1).otherwise(0)
-                ).alias("del"),
-            ).collect()[0]
-            metrics.n_inserted = agg["ins"] or 0
-            metrics.n_updated = agg["upd"] or 0
-            metrics.n_stale_ignored = agg["stale"] or 0
-            metrics.n_deleted = agg["del"] or 0
-            merged = merged.drop("_action")
+            # --- bucket pruning ------------------------------------------
+            if touched_buckets is not None:
+                touched = sorted(touched_buckets)
+            else:
+                touched = sorted(
+                    r[_BUCKET_COL]
+                    for r in src.select(_BUCKET_COL).distinct().collect()
+                )
+            if not touched:
+                # an all-invalid batch commits nothing but its id
+                return self._write_and_commit(snap, batch_id, None, set(),
+                                              pre_commit=pre_commit)
 
-        # --- write new files for touched buckets --------------------------
-        # attempt-unique directory: racing writers from the same parent must
-        # never collide on a path (the final version is assigned at commit)
-        rel_dir = self._attempt_dir(snap)
-        out_dir = os.path.join(self.root, rel_dir)
-        (merged.repartition(max(1, min(len(touched), 200)), F.col(_BUCKET_COL))
-               .write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(out_dir))
-        if collect_metrics:
-            merged.unpersist()
+            tgt_refs = [r for r in snap["refs"] if r["bucket"] in set(touched)]
+            tgt = self._read_refs(snap, tgt_refs, with_deleted=True)
+            if self.has_deltas(snap):
+                # unresolved MOR deltas would give >1 target row per key
+                # and explode the outer join — resolve them first
+                tgt = dedupe_lww(tgt, key_cols, version_cols)
+            tgt = tgt.withColumn(_BUCKET_COL, self.bucket_expr(snap))
+            tgt = tgt.withColumn(_JK_COL,
+                                 F.struct(*[F.col(c) for c in key_cols]))
 
-        written = self._list_written(out_dir, rel_dir)
+            # --- resolve: full outer join on key, conditional LWW --------
+            # presence markers + null-safe key equality: key columns MAY
+            # hold NULL (e.g. a view table grouped on a nullable column) —
+            # deriving presence from key nullability would mis-classify
+            # those rows and plain equality would never match them.
+            # Equality on the key STRUCT is per-field null-safe (verified:
+            # struct(NULL,'x') = struct(NULL,'x') is true) and lets the
+            # join reuse the dedup's exchange — see the dedup comment.
+            src = src.withColumn("_s_mark", F.lit(True))
+            tgt = tgt.withColumn("_t_mark", F.lit(True))
+            j = src.alias("s").join(tgt.alias("t"),
+                                    F.col(f"s.{_JK_COL}") == F.col(f"t.{_JK_COL}"),
+                                    "full_outer")
 
-        unexpected = set(written) - set(touched)
-        if unexpected:
-            # abort BEFORE the pointer flip: the old snapshot stays current,
-            # the orphan attempt files are dead weight only (GC'able)
-            raise RuntimeError(
-                f"merge wrote buckets {sorted(unexpected)} outside the caller's "
-                "touched_buckets — it must be a superset of the source's buckets "
-                "(retained old refs for those buckets would silently duplicate keys)"
+            s_ver = F.struct(*[F.col(f"s.{c}") for c in version_cols])
+            t_ver = F.struct(*[F.col(f"t.{c}") for c in version_cols])
+            s_present = F.col("s._s_mark").isNotNull()
+            t_present = F.col("t._t_mark").isNotNull()
+            take_src = s_present & (~t_present | (s_ver > t_ver))
+
+            merged = j.select(
+                *[F.when(take_src, F.col(f"s.{f.name}"))
+                  .otherwise(F.col(f"t.{f.name}")).alias(f.name)
+                  for f in self._stored_schema(snap).fields],
+                F.coalesce(F.col(f"s.{_BUCKET_COL}"), F.col(f"t.{_BUCKET_COL}"))
+                .alias(_BUCKET_COL),
+                F.when(take_src & ~t_present, F.lit(_INSERT))
+                .when(take_src & t_present, F.lit(_UPDATE))
+                .when(s_present & ~(s_ver > t_ver), F.lit(_STALE))
+                .cast("byte").alias(_ACTION_COL),
             )
 
-        if pre_commit is not None:
-            pre_commit()  # must be durable before the snapshot flips
+            # --- row counts ride the bucket write ------------------------
+            # observed after the repartition, so they are collected in the
+            # write's own result stage; a fresh Observation per attempt (one
+            # can only be used once)
+            act = F.col(_ACTION_COL)
+            obs = Observation()
+            out = (
+                merged.repartition(max(1, min(len(touched), 200)),
+                                   F.col(_BUCKET_COL))
+                .observe(obs,
+                         F.count_if(act == _INSERT).alias("n_inserted"),
+                         F.count_if(act == _UPDATE).alias("n_updated"),
+                         F.count_if(act == _STALE).alias("n_stale_ignored"),
+                         F.count_if(act.isin(_INSERT, _UPDATE)
+                                    & F.col(_DELETED_COL)).alias("n_deleted"))
+                .drop(_ACTION_COL)
+            )
+            return self._write_and_commit(snap, batch_id, out, set(touched),
+                                          pre_commit=pre_commit,
+                                          counts=lambda: obs.get)
 
-        new_snap, skipped = self._cas_commit(
-            snap, batch_id, self._make_refs(snap, written), set(touched))
-        if skipped:
-            return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                                skipped_already_committed=True)
-        metrics.version = new_snap["version"]
-        if collect_metrics:
-            lin = self._lineage_rows(batch_id, metrics.version, metrics)
-            self._append_lineage(lin)
-        return metrics
+        return self._commit_with_retries("merge", batch_id, attempt)
 
-
-    def _commit_with_retries(self, label: str, attempt_fn):
-        """Run a commit attempt, recomputing on CommitConflict (each
-        conflict means a peer committed — bounded, system-wide-progressing
-        retries) with jittered backoff between attempts. Re-raises with
-        the LAST conflict's reason chained for diagnosability."""
+    # ------------------------------------------------------ commit protocol
+    def _commit_with_retries(self, kind: str, batch_id: str, attempt_fn) -> MergeMetrics:
+        """Run ``attempt_fn(snap)`` against the current snapshot until it
+        commits. A batch id the snapshot already holds is a replay: it
+        returns as skipped and the attempt never runs. Each CommitConflict
+        (a peer committed — bounded, system-wide-progressing retries)
+        recomputes against a fresh snapshot after a jittered backoff.
+        Re-raises with the LAST conflict's reason chained for
+        diagnosability."""
         last: CommitConflict | None = None
         for attempt in range(_MAX_COMMIT_RETRIES):
+            snap = self.snapshot()
+            if self.is_committed(batch_id, snap):
+                return MergeMetrics(batch_id=batch_id, version=snap["version"],
+                                    skipped_already_committed=True)
             try:
-                return attempt_fn()
+                return attempt_fn(snap)
             except CommitConflict as e:
                 last = e
                 if attempt < _MAX_COMMIT_RETRIES - 1:
                     _conflict_backoff(attempt)
         raise CommitConflict(
-            f"{label} exhausted {_MAX_COMMIT_RETRIES} commit retries"
+            f"{kind}({batch_id!r}) exhausted {_MAX_COMMIT_RETRIES} commit retries"
         ) from last
+
+    def _write_and_commit(
+        self,
+        snap: dict,
+        batch_id: str,
+        out: DataFrame | None,
+        replace: set | None,
+        exclusive: bool = False,
+        pre_commit=None,
+        rows_per_file: int | None = None,
+        counts=None,
+    ) -> MergeMetrics:
+        """The commit tail every write kind shares, computed against parent
+        ``snap``.
+
+        ``out`` (laid out by the caller, carrying ``_BUCKET_COL``) is
+        written bucket-partitioned into an attempt-unique directory; None
+        commits the batch id alone. ``replace`` is the bucket set whose
+        refs the commit swaps for the written ones (None = delta append,
+        ``exclusive`` = never rebase, see ``_cas_commit``). Then, in order:
+        a non-exclusive replace that wrote a bucket outside ``replace``
+        raises — the retained old refs for that bucket would silently
+        duplicate keys; ``pre_commit()`` runs, on every path; the CAS
+        publishes (a replay found under the lock returns as skipped); and
+        the commit's metrics — ``counts()`` read after the write, plus the
+        buckets written — are returned and appended as one lineage row."""
+        written: dict = {}
+        if out is not None:
+            # attempt-unique directory: racing writers from the same parent
+            # must never collide on a path (the version is assigned at commit)
+            rel_dir = self._attempt_dir(snap)
+            out_dir = os.path.join(self.root, rel_dir)
+            writer = out.write.partitionBy(_BUCKET_COL).mode("overwrite")
+            if rows_per_file:
+                writer = writer.option("maxRecordsPerFile", int(rows_per_file))
+            writer.parquet(out_dir)
+            written = self._list_written(out_dir, rel_dir)
+
+        unexpected = (set() if replace is None or exclusive
+                      else set(written) - replace)
+        if unexpected:
+            # abort BEFORE the pointer flip: the old snapshot stays current,
+            # the orphan attempt files are dead weight only (GC'able)
+            raise RuntimeError(
+                f"commit {batch_id!r} wrote buckets {sorted(unexpected)} "
+                "outside the buckets it replaces — merge's touched_buckets "
+                "must be a superset of the source's buckets (retained old "
+                "refs for those buckets would silently duplicate keys)"
+            )
+        if pre_commit is not None:
+            pre_commit()  # must be durable before the snapshot flips
+
+        new_snap, skipped = self._cas_commit(
+            snap, batch_id,
+            self._make_refs(snap, written, delta=replace is None),
+            replace, exclusive=exclusive)
+        if skipped:
+            return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
+                                skipped_already_committed=True)
+        m = MergeMetrics(batch_id=batch_id, version=new_snap["version"],
+                         n_buckets_touched=len(written),
+                         **(counts() if counts is not None else {}))
+        row = asdict(m)
+        del row["skipped_already_committed"]
+        self._append_lineage(row)
+        return m
 
     # ------------------------------------------------ optimistic concurrency
     @staticmethod
@@ -1438,24 +1365,9 @@ class MergeTable:
         return out
 
     # ------------------------------------------------------------- lineage
-    def _lineage_rows(self, batch_id: str, version: int, m: MergeMetrics):
-        return [
-            {
-                "batch_id": batch_id,
-                "version": version,
-                "n_inserted": m.n_inserted,
-                "n_updated": m.n_updated,
-                "n_stale_ignored": m.n_stale_ignored,
-                "n_deleted": m.n_deleted,
-                "n_buckets_touched": m.n_buckets_touched,
-            }
-        ]
-
-    def _append_lineage(self, rows: list[dict]) -> None:
-        path = os.path.join(self.root, "lineage.jsonl")
-        with open(path, "a") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
+    def _append_lineage(self, row: dict) -> None:
+        with open(os.path.join(self.root, "lineage.jsonl"), "a") as f:
+            f.write(json.dumps(row) + "\n")
 
     def lineage(self) -> list[dict]:
         path = os.path.join(self.root, "lineage.jsonl")
@@ -1503,60 +1415,38 @@ class MergeTable:
         them in passing. Untouched buckets keep their existing file refs —
         a repair touching 1% of keys rewrites ~1% of the table, not all of
         it. Idempotent by batch_id."""
-        return self._commit_with_retries(
-            f"update_where({batch_id!r})",
-            lambda: self._update_where_attempt(condition, assignments,
-                                               batch_id))
-
-    def _update_where_attempt(self, condition, assignments: dict,
-                              batch_id: str) -> MergeMetrics:
-        snap = self.snapshot()
-        if self.is_committed(batch_id, snap):
-            return MergeMetrics(batch_id=batch_id, version=snap["version"],
-                                skipped_already_committed=True)
-
-        # job 1: touched buckets + hit counts in one pruned-scan aggregate
-        hits = (
-            self.read(with_deleted=True)
-            .filter(condition & ~F.col(_DELETED_COL))
-            .groupBy(self.bucket_expr(snap).alias(_BUCKET_COL))
-            .count()
-            .collect()
-        )
-        touched = {r[_BUCKET_COL] for r in hits}
-        n_fixed = sum(r["count"] for r in hits)
-        if not touched:
-            new_snap, skipped = self._cas_commit(snap, batch_id, [], set())
-            return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                                skipped_already_committed=skipped)
-
-        # job 2: rewrite only the touched buckets (LWW-resolved, so the new
-        # file can replace base + delta refs for those buckets)
-        tgt_refs = [r for r in snap["refs"] if r["bucket"] in touched]
-        cur = self._read_refs(snap, tgt_refs, with_deleted=True)
-        if self.has_deltas(snap):
-            from ..operators.lww import dedupe_lww
-
-            cur = dedupe_lww(cur, snap["key_cols"], snap["version_cols"])
-        fixed = cur.withColumn(_BUCKET_COL, self.bucket_expr(snap))
-        for col, expr in assignments.items():
-            fixed = fixed.withColumn(
-                col, F.when(condition & ~F.col(_DELETED_COL), expr).otherwise(F.col(col))
+        def attempt(snap: dict) -> MergeMetrics:
+            # job 1: touched buckets + hit counts in one pruned-scan aggregate
+            hits = (
+                self.read(with_deleted=True, version=snap["version"])
+                .filter(condition & ~F.col(_DELETED_COL))
+                .groupBy(self.bucket_expr(snap).alias(_BUCKET_COL))
+                .count()
+                .collect()
             )
-        rel_dir = self._attempt_dir(snap)
-        out_dir = os.path.join(self.root, rel_dir)
-        (fixed.repartition(max(1, min(len(touched), 200)), F.col(_BUCKET_COL))
-              .write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(out_dir))
-        written = self._list_written(out_dir, rel_dir)
-        new_snap, skipped = self._cas_commit(
-            snap, batch_id, self._make_refs(snap, written), touched)
-        if skipped:
-            return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                                skipped_already_committed=True)
-        m = MergeMetrics(batch_id=batch_id, version=new_snap["version"],
-                         n_updated=n_fixed, n_buckets_touched=len(written))
-        self._append_lineage(self._lineage_rows(batch_id, m.version, m))
-        return m
+            touched = {r[_BUCKET_COL] for r in hits}
+            n_fixed = sum(r["count"] for r in hits)
+            if not touched:
+                return self._write_and_commit(snap, batch_id, None, set())
+
+            # job 2: rewrite only the touched buckets (LWW-resolved, so the
+            # new file can replace base + delta refs for those buckets)
+            tgt_refs = [r for r in snap["refs"] if r["bucket"] in touched]
+            cur = self._read_refs(snap, tgt_refs, with_deleted=True)
+            if self.has_deltas(snap):
+                from ..operators.lww import dedupe_lww
+
+                cur = dedupe_lww(cur, snap["key_cols"], snap["version_cols"])
+            fixed = cur.withColumn(_BUCKET_COL, self.bucket_expr(snap))
+            for col, expr in assignments.items():
+                fixed = fixed.withColumn(
+                    col, F.when(condition & ~F.col(_DELETED_COL), expr).otherwise(F.col(col))
+                )
+            out = fixed.repartition(max(1, min(len(touched), 200)), F.col(_BUCKET_COL))
+            return self._write_and_commit(snap, batch_id, out, touched,
+                                          counts=lambda: {"n_updated": n_fixed})
+
+        return self._commit_with_retries("update_where", batch_id, attempt)
 
     # ----------------------------------------------------------- changelog
     @staticmethod
@@ -1601,9 +1491,7 @@ class MergeTable:
         key_cols = snap_b["key_cols"]
         version_cols = snap_b["version_cols"]
         target = self.schema(snap_b)
-        full = T.StructType(
-            target.fields + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-        )
+        full = self._stored_schema(snap_b)
         out_schema = T.StructType(
             target.fields
             + [
@@ -1723,10 +1611,10 @@ class MergeTable:
                                     cur.get("committed_at") or 0.0),
             }
             self._write_snapshot(new_snap)
-        self._append_lineage([{
+        self._append_lineage({
             "batch_id": batch_id, "version": new_snap["version"],
             "rollback_to": version,
-        }])
+        })
         return new_snap
 
     # ------------------------------------------------------------- tags

@@ -4,6 +4,8 @@ Mirrors the reference's upsert-sink semantics tests (SURVEY §5) but asserts
 the *stronger* contract: stale replays never overwrite newer state.
 """
 
+from dataclasses import asdict
+
 import pyspark.sql.types as T
 import pytest
 from pyspark.sql import functions as F
@@ -143,15 +145,21 @@ def test_schema_evolution_additive_and_widening(spark, tmpdir_path):
     assert state(tbl)[("a", "x")] == (3, "v3")
 
 
-def test_incompatible_type_change_rejected(spark, tmpdir_path):
+@pytest.mark.parametrize("row,ddl", [
+    (("a", "x", "not-a-number", 0, "v", "INSERT"),
+     "repo string, path string, commit_seq string, event_seq long, "
+     "content string, op string"),
+    # a key type no widening covers: rejected before the join key is built
+    (("a", 7, 1, 0, "v", "INSERT"),
+     "repo string, path long, commit_seq long, event_seq long, "
+     "content string, op string"),
+], ids=["version_col", "key_col"])
+def test_incompatible_type_change_rejected(spark, tmpdir_path, row, ddl):
     tbl = make_table(spark, tmpdir_path)
-    bad = spark.createDataFrame(
-        [("a", "x", "not-a-number", 0, "v", "INSERT")],
-        "repo string, path string, commit_seq string, event_seq long, "
-        "content string, op string",
-    )
+    bad = spark.createDataFrame([row], ddl)
     with pytest.raises(ValueError, match="incompatible"):
         tbl.merge(bad, "b1")
+    assert tbl.version == 0
 
 
 def test_update_where_repair_pass(spark, tmpdir_path):
@@ -169,3 +177,82 @@ def test_update_where_repair_pass(spark, tmpdir_path):
     m2 = tbl.update_where(F.col("content") == "broken",
                           {"content": F.lit("repaired")}, "fix-1")
     assert m2.skipped_already_committed
+
+
+def _commit_kinds(spark, tbl):
+    """One call per commit kind, each committing a fresh batch id."""
+    row = [("a", "x", 2, 0, "v2", "UPDATE")]
+    return {
+        "merge": lambda bid: tbl.merge(df(spark, row), bid),
+        "merge_mor": lambda bid: tbl.merge_mor(df(spark, row), bid),
+        "compact": lambda bid: tbl.compact(bid),
+        "rebucket": lambda bid: tbl.rebucket(8, bid),
+        "update_where": lambda bid: tbl.update_where(
+            F.col("content") == "v1", {"content": F.lit("fixed")}, bid),
+    }
+
+
+@pytest.mark.parametrize(
+    "kind", ["merge", "merge_mor", "compact", "rebucket", "update_where"])
+def test_every_commit_kind_logs_lineage_once_and_replays_as_skip(
+        spark, tmpdir_path, kind):
+    tbl = make_table(spark, tmpdir_path)
+    tbl.merge_mor(df(spark, [("a", "x", 1, 0, "v1", "INSERT"),
+                             ("a", "y", 1, 1, "v1", "INSERT")]), "seed")
+    commit = _commit_kinds(spark, tbl)[kind]
+    v0, n0 = tbl.version, len(tbl.lineage())
+    m = commit("k1")
+    assert not m.skipped_already_committed
+    assert m.version == tbl.version == v0 + 1
+    row = asdict(m)
+    del row["skipped_already_committed"]
+    assert tbl.lineage()[n0:] == [row]
+    again = commit("k1")
+    assert again.skipped_already_committed
+    assert tbl.version == v0 + 1
+    assert len(tbl.lineage()) == n0 + 1
+
+
+@pytest.mark.parametrize("n_rows", [1, 0])
+@pytest.mark.parametrize("kind", ["merge", "merge_mor"])
+def test_raising_pre_commit_aborts_the_commit(spark, tmpdir_path, kind, n_rows):
+    """The barrier runs on every path, the zero-row (id-only) commit
+    included: if it raises, the batch is not committed."""
+    tbl = make_table(spark, tmpdir_path)
+    rows = [("a", "x", 1, 0, "v1", "INSERT")][:n_rows]
+
+    def barrier():
+        raise OSError("side write failed")
+
+    with pytest.raises(OSError, match="side write failed"):
+        getattr(tbl, kind)(df(spark, rows), "b1", pre_commit=barrier)
+    assert tbl.version == 0
+    assert not tbl.is_committed("b1")
+    assert tbl.lineage() == []
+
+
+def test_cow_merge_counts_ride_the_write(spark, tmpdir_path):
+    """Insert/update/stale/delete counts are observed on the bucket write:
+    with the touched buckets given, the merge runs the 4 jobs its write
+    needs (the source and target shuffles, the bucket shuffle, the write)
+    and none more for counting."""
+    tbl = make_table(spark, tmpdir_path)
+    tbl.merge(df(spark, [("a", "x", 5, 0, "v", "INSERT"),
+                         ("a", "y", 1, 0, "v", "INSERT"),
+                         ("a", "z", 1, 0, "v", "INSERT")]), "b1")
+    src = df(spark, [("a", "x", 3, 0, "old", "UPDATE"),    # stale
+                     ("a", "y", 2, 0, "new", "UPDATE"),    # update
+                     ("a", "z", 2, 0, None, "DELETE"),     # update + delete
+                     ("b", "w", 1, 0, "n", "INSERT")])     # insert
+    touched = sorted({r["_b"] for r in src.select(
+        tbl.bucket_expr().alias("_b")).distinct().collect()})
+    sc = spark.sparkContext
+    group = f"cow-merge-{tmpdir_path}"
+    sc.setJobGroup(group, "cow merge job count")
+    try:
+        m = tbl.merge(src, "b2", touched_buckets=touched)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (m.n_inserted, m.n_updated, m.n_stale_ignored, m.n_deleted) == \
+        (1, 2, 1, 1)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4

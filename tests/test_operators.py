@@ -1,10 +1,9 @@
-"""Operator-level tests: LWW variants parity, as-of joins, skew, text/dedup/sim."""
+"""Operator-level tests: LWW variants parity, as-of joins, text/dedup/sim."""
 
 from pyspark.sql import functions as F
 
 from ore_etl_spark.operators.asof import asof_join_range, asof_join_union
 from ore_etl_spark.operators.lww import dedupe_lww, dedupe_lww_window
-from ore_etl_spark.operators.skew import key_histogram, salted_repartition
 
 
 def test_lww_agg_matches_window(spark):
@@ -58,20 +57,6 @@ def test_asof_union_matches_range(spark):
                         lookback=10_000, left_id_cols=["id"], tie_col="ref_id")
     got_r = {row["id"]: row["ref_id"] for row in r.collect()}
     assert got_r == got_u
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    df = spark.createDataFrame(
-        [("hot", f"p{i}") for i in range(400)] + [("cold", "q")],
-        "repo string, path string",
-    )
-    out = salted_repartition(df, 8, n_salts=8)
-    sizes = out.rdd.glom().map(len).collect()
-    nonempty = [s for s in sizes if s > 0]
-    assert len(nonempty) >= 4  # hot key spread over multiple partitions
-    assert max(sizes) < 401
-    hist = key_histogram(df)
-    assert hist[0]["repo"] == "hot" and hist[0]["share"] > 0.9
 
 
 def test_text_features(spark):

@@ -51,8 +51,7 @@ def test_any_batching_any_order_converges(spark, wal_fixture, data):
             key_cols=["repo", "path"], version_cols=["commit_seq", "event_seq"],
             n_buckets=4,
         )
-        pipe = CdcApplyPipeline(spark, path, tbl, f"{work}/s", mode=mode,
-                                collect_metrics=False)
+        pipe = CdcApplyPipeline(spark, path, tbl, f"{work}/s", mode=mode)
         for r in order:
             pipe.run_batch(*r)
         pipe.run_batch(*order[replay_idx])  # duplicate submission -> no-op

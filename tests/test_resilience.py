@@ -264,8 +264,7 @@ def test_quarantine_recovers_mid_swap_crash(spark, tmpdir_path):
         key_cols=["repo", "path"], version_cols=["commit_seq", "event_seq"],
         n_buckets=4,
     )
-    p = CdcApplyPipeline(spark, wal, tbl, f"{tmpdir_path}/state",
-                         collect_metrics=False)
+    p = CdcApplyPipeline(spark, wal, tbl, f"{tmpdir_path}/state")
     p.run()
     n_q = p.quarantine().count()
     assert n_q > 0

@@ -247,8 +247,7 @@ def test_compact_depth_policy_bounds_read_amplification(spark, tmpdir_path):
         n_buckets=8,
     )
     p = CdcApplyPipeline(spark, wal, tbl, f"{tmpdir_path}/state",
-                         collect_metrics=False, mode="mor",
-                         compact_depth=2)
+                         mode="mor", compact_depth=2)
     lo, hi = p.delivery_range()
     p.run(batch_span=max(1, (hi - lo) // 6))
     assert tbl.delta_depth() <= 2
