@@ -702,8 +702,9 @@ N vs 4N executors per BASELINE.json. Each level: untimed warm-up apply
 Sink architectures (both converge to the identical state, verified by the
 pytest sha256 replay oracle and the driver's DuckDB oracle):
 
-- **MOR** (merge-on-read; the 10^10-event ingest write path): shuffle-free
-  bucketed delta append per batch, LWW resolved at read, compaction folds
+- **MOR** (merge-on-read; the 10^10-event ingest write path): one
+  bucket-exchanged delta append per batch (one file per touched bucket),
+  LWW resolved at read, compaction folds
   deltas (timed). Bytes written per batch are O(batch), not O(table).
 - **COW** (copy-on-write conditional MERGE): read-optimized; each batch
   joins + rewrites its touched buckets.

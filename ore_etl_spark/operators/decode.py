@@ -47,8 +47,13 @@ def _le_u32(bin_col: F.Column, offset: int) -> F.Column:
     return F.conv(be, 16, 10).cast("long")
 
 
-def decode_events(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Attach decoded columns (JVM fast path).
+class Decoder:
+    """``decode_events`` with its Column expressions built once.
+
+    Building the expressions costs ~470 py4j round trips (PySpark 4.1
+    captures the call site on every ``F.*`` call); applying a built
+    ``Decoder`` to a frame costs ~20. A caller that decodes every batch
+    (the apply pipeline's tail) keeps one and reuses it.
 
     The base64 binary is projected ONCE into an intermediate ``_bin``
     column; every derived expression reads that column. Without this,
@@ -57,38 +62,45 @@ def decode_events(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     optimizer keeps the two-step projection because ``unbase64`` is not a
     cheap expression, so CollapseProject does not re-inline it.
     """
-    bin_ref = F.col("_bin")
-    version = _le_u32(bin_ref, 0)
-    blen = _le_u32(bin_ref, 4)
-    # substring on binary with fixed huge length: everything after header
-    body = F.substring(bin_ref, 9, 1 << 30)
-    content = body.cast("string")
-    # try_to_binary validates base64 strictly and yields NULL on garbage —
-    # plain unbase64 THROWS under ANSI mode (Spark 4 default) and would
-    # fail the whole batch on one malformed payload.
-    # UTF-8 validity = decode/encode round-trip: cast(binary as string)
-    # substitutes U+FFFD for invalid sequences, so re-encoding equals the
-    # original bytes IFF the body was valid UTF-8 (UTF-8 encodings are
-    # unique) — keeps this path bit-agreeing with the pandas parity path,
-    # whose body.decode('utf-8') raises on the same inputs.
-    ok = (
-        bin_ref.isNotNull()
-        & (F.length(bin_ref) >= 8)
-        & (F.length(bin_ref) - 8 == blen)
-        & (F.encode(content, "UTF-8") == body)
-    )
-    return (
-        df.withColumn("_bin", F.try_to_binary(F.col(payload_col), F.lit("base64")))
-        .select(
-            "*",
+
+    def __init__(self, payload_col: str = "payload"):
+        bin_ref = F.col("_bin")
+        version = _le_u32(bin_ref, 0)
+        blen = _le_u32(bin_ref, 4)
+        # substring on binary with fixed huge length: everything after header
+        body = F.substring(bin_ref, 9, 1 << 30)
+        content = body.cast("string")
+        # try_to_binary validates base64 strictly and yields NULL on garbage
+        # — plain unbase64 THROWS under ANSI mode (Spark 4 default) and
+        # would fail the whole batch on one malformed payload.
+        # UTF-8 validity = decode/encode round-trip: cast(binary as string)
+        # substitutes U+FFFD for invalid sequences, so re-encoding equals
+        # the original bytes IFF the body was valid UTF-8 (UTF-8 encodings
+        # are unique) — keeps this path bit-agreeing with the pandas parity
+        # path, whose body.decode('utf-8') raises on the same inputs.
+        ok = (
+            bin_ref.isNotNull()
+            & (F.length(bin_ref) >= 8)
+            & (F.length(bin_ref) - 8 == blen)
+            & (F.encode(content, "UTF-8") == body)
+        )
+        self._bin = F.try_to_binary(F.col(payload_col), F.lit("base64"))
+        self._out = [
+            F.col("*"),
             F.when(ok, version).otherwise(F.lit(None)).cast("long").alias("payload_version"),
             F.when(ok, content).otherwise(F.lit(None)).alias("content"),
             F.when(ok, blen).otherwise(F.lit(None)).cast("long").alias("content_len"),
             F.when(ok, F.sha2(content, 256)).otherwise(F.lit(None)).alias("content_sha256"),
             ok.alias("is_valid"),
-        )
-        .drop("_bin")
-    )
+        ]
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        return df.withColumn("_bin", self._bin).select(*self._out).drop("_bin")
+
+
+def decode_events(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """Attach decoded columns (JVM fast path); see ``Decoder``."""
+    return Decoder(payload_col)(df)
 
 
 # ---------------------------------------------------------------------------

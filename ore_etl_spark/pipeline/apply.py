@@ -22,8 +22,11 @@ reads only the files whose bounds meet its range, with the row filter
 pushed down on top (row-group pruning, since the WAL is written in
 arrival order). Decode is narrow — no shuffle. COW's only shuffle is the
 key hash for dedup+MERGE join, with the target-side read pruned to
-touched buckets; MOR appends with no shuffle at all. Per-batch driver
-work is O(buckets + partitions + new WAL files), never O(events).
+touched buckets; MOR's only shuffle is the bucket exchange of the batch
+itself, so each touched bucket gets one delta file, written on every
+core. Per-batch driver work is O(buckets + partitions + new WAL files),
+never O(events), and the batch's Column expressions are built once per
+pipeline and table, not per batch.
 """
 
 from __future__ import annotations
@@ -36,9 +39,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.decode import decode_events
+from ..operators.decode import Decoder
 from ..state.stores import CheckpointStore, MetricsLog
-from ..tables.merge_table import MergeTable, _pyarrow_file_bounds
+from ..tables.merge_table import ExprCache, MergeTable, _pyarrow_file_bounds
 
 TARGET_FIELDS = [
     ("repo", T.StringType()),
@@ -58,7 +61,7 @@ def target_schema() -> T.StructType:
     return T.StructType([T.StructField(n, t, True) for n, t in TARGET_FIELDS])
 
 
-# columns decode_events attaches — everything else in a decoded frame is the
+# columns the Decoder attaches — everything else in a decoded frame is the
 # raw event row (preserved whole in quarantine so a redrive can re-decode)
 DECODE_ADDED = ("payload_version", "content", "content_len",
                 "content_sha256", "is_valid")
@@ -94,7 +97,6 @@ class CdcApplyPipeline:
         mode: str = "cow",
         compact_every: int | None = None,
         compact_depth: int | None = None,
-        mor_append_rows_per_task: int | None = 32_000,
         events_format: str = "parquet",
         source_schema: T.StructType | None = None,
         source_options: dict | None = None,
@@ -134,16 +136,8 @@ class CdcApplyPipeline:
         self.mode = mode
         self.compact_every = compact_every
         self.compact_depth = compact_depth
-        # MOR delta files per batch = write tasks x n_buckets, so
-        # scan-width writes are pure file-count amplification (~100-row
-        # files at bench scale). The append is coalesced (NOT shuffled —
-        # the no-Exchange contract holds) to ceil(batch_rows / this)
-        # tasks, sized from the row count the stats pass already
-        # collected: width grows with the batch, never past the scan
-        # width, and per-file overhead amortizes ~5x (measured 2x
-        # end-to-end on the 1M-event apply). None/0 disables.
-        self.mor_append_rows_per_task = mor_append_rows_per_task
         self._batches_since_compact = 0
+        self._expr = ExprCache()
         # WAL footer index: path -> ((size, mtime_ns), [min, max] of
         # delivery_seq or None); the schema the whole-dir read infers,
         # keyed by the listing facts it depends on
@@ -240,8 +234,9 @@ class CdcApplyPipeline:
         parquet WAL reads only the files whose footer bounds meet the
         range, with the schema the whole-dir read infers — the batch's
         columns do not depend on which files it reads."""
-        rng = ((F.col("delivery_seq") > seq_lo)
-               & (F.col("delivery_seq") <= seq_hi))
+        # a SQL string is one py4j round trip; the same predicate built
+        # from F.col/>/<=/& is ~60
+        rng = f"delivery_seq > {int(seq_lo)} AND delivery_seq <= {int(seq_hi)}"
         files = self._wal_files()
         if not files:
             return self.events().filter(rng)
@@ -267,7 +262,8 @@ class CdcApplyPipeline:
         inside = all(b is not None and seq_lo < b[0] and b[1] <= seq_hi
                      for _, b in keep)
         return reader.parquet(*[p for p, _ in keep]).filter(
-            F.col("delivery_seq").isNotNull() if inside else rng)
+            self._expr("seq_not_null", lambda: F.col("delivery_seq").isNotNull())
+            if inside else rng)
 
     def delivery_range(self) -> tuple[int, int]:
         """(min, max) ``delivery_seq`` of the WAL. A flat local parquet WAL
@@ -361,26 +357,29 @@ class CdcApplyPipeline:
         rows are quarantined once, by their owner, never S times or
         zero)."""
         batch = self._range_events(seq_lo, seq_hi)
-        bucket = self.table.bucket_expr()
+        snap = self.table.snapshot()
+        spec = (tuple(snap["key_cols"]), snap["n_buckets"])
+        bucket = self.table.bucket_expr(snap)
         if bucket_slice is not None:
             k, n_slices = bucket_slice
-            batch = batch.filter(F.pmod(bucket, F.lit(n_slices)) == k)
-        decoded = decode_events(batch)
-        opt_present_aggs = [
-            F.max(F.col(c).isNotNull()).alias(f"has_{c}")
-            for c in self.optional_cols if c in decoded.columns
-        ]
-        part_stats = (
-            decoded.groupBy("partition_id")
-            .agg(
-                F.count("*").alias("n_in"),
-                F.sum(F.when(~F.col("is_valid"), 1).otherwise(0)).alias("n_bad"),
-                F.max("delivery_seq").alias("hwm"),
-                F.collect_set(F.when(F.col("is_valid"), bucket)).alias("buckets"),
-                *opt_present_aggs,
-            )
-            .collect()
-        )
+            batch = batch.filter(self._expr(
+                ("slice", spec, k, n_slices),
+                lambda: F.pmod(bucket, F.lit(n_slices)) == k))
+        decoded = self._expr("decoder", Decoder)(batch)
+        present = tuple(c for c in self.optional_cols if c in decoded.columns)
+
+        def aggs():
+            return (
+                F.col("partition_id"),
+                [F.count("*").alias("n_in"),
+                 F.sum(F.when(~F.col("is_valid"), 1).otherwise(0)).alias("n_bad"),
+                 F.max("delivery_seq").alias("hwm"),
+                 F.collect_set(F.when(F.col("is_valid"), bucket)).alias("buckets"),
+                 *[F.max(F.col(c).isNotNull()).alias(f"has_{c}")
+                   for c in present]])
+
+        by, agg = self._expr(("stats", spec, present), aggs)
+        part_stats = decoded.groupBy(by).agg(*agg).collect()
         return decoded, part_stats
 
     def run_batch(self, seq_lo: int, seq_hi: int, batch_id: str | None = None,
@@ -393,9 +392,11 @@ class CdcApplyPipeline:
 
         Spark jobs per batch: one stats pass (counters, per-partition
         watermarks, touched buckets, schema-evolution column presence),
-        then the write — a shuffle-free append for MOR, the dedup+MERGE
-        job(s) for COW — plus the quarantine write when the batch has
-        invalid rows, and a compaction when the MOR cadence trips. For a
+        then the write — for MOR an append whose one exchange lays the
+        batch out by bucket (one delta file per touched bucket, every core
+        writing), the dedup+MERGE job(s) for COW — plus the quarantine
+        write when the batch has invalid rows, and a compaction when the
+        MOR cadence trips. For a
         parquet WAL the scan is planned from footer bounds (only files
         meeting the range are read), so no listing or schema-inference
         job precedes it. Deliberately NO ``.persist()`` of the decoded
@@ -450,12 +451,13 @@ class CdcApplyPipeline:
             # the dir here would otherwise strand a complete .next
             # generation forever (quarantine() would never promote it)
             self._quarantine_recover()
-            raw_cols = [c for c in decoded.columns if c not in DECODE_ADDED]
-            bad = decoded.filter(~F.col("is_valid")).select(
-                *raw_cols,
-                F.lit("payload_decode_failed").alias("error"),
-                F.lit(1).alias("attempts"),
-            )
+            raw_cols = tuple(c for c in decoded.columns if c not in DECODE_ADDED)
+            keep, cols = self._expr(("quarantine", raw_cols), lambda: (
+                ~F.col("is_valid"),
+                [*map(F.col, raw_cols),
+                 F.lit("payload_decode_failed").alias("error"),
+                 F.lit(1).alias("attempts")]))
+            bad = decoded.filter(keep).select(*cols)
             qdir = f"{self.quarantine_dir}/batch_id={batch_id.replace(':', '_')}"
             from concurrent.futures import ThreadPoolExecutor
 
@@ -464,14 +466,14 @@ class CdcApplyPipeline:
                 lambda: bad.write.mode("overwrite").parquet(qdir))
             pre_commit = quarantine_fut.result
 
-        # --- the write: MOR shuffle-free append / COW LWW MERGE ------------
-        cols = [n for n, _ in TARGET_FIELDS] + ["op"]
-        valid = decoded.filter(F.col("is_valid")).select(*cols, *extra)
+        # --- the write: MOR bucket-exchanged append / COW LWW MERGE ------
+        keep, cols = self._expr(("valid", tuple(extra)), lambda: (
+            F.col("is_valid"),
+            [F.col(c) for c in [n for n, _ in TARGET_FIELDS] + ["op", *extra]]))
+        valid = decoded.filter(keep).select(*cols)
         try:
             if self.mode == "mor":
-                m = self.table.merge_mor(
-                    valid, batch_id, write_coalesce=self._append_width(part_stats),
-                    pre_commit=pre_commit)
+                m = self.table.merge_mor(valid, batch_id, pre_commit=pre_commit)
                 self._batches_since_compact += 1
                 due = (self.compact_every
                        and self._batches_since_compact >= self.compact_every)
@@ -491,28 +493,6 @@ class CdcApplyPipeline:
 
         return self._finish_batch(batch_id, seq_lo, seq_hi, part_stats, qn,
                                   m, update_global_hwm, t0)
-
-    def _append_width(self, part_stats) -> int | None:
-        """Write tasks for a MOR append, sized from the stats row count:
-        ceil(valid rows / ``mor_append_rows_per_task``), with a floor for
-        small batches (below). None = scan width."""
-        per = self.mor_append_rows_per_task
-        if not per:
-            return None
-        n_valid = sum((r["n_in"] or 0) - (r["n_bad"] or 0) for r in part_stats)
-        n1 = -(-n_valid // per) or 1
-        # small-batch width floor (guide §1.2/§6): the append wall has a
-        # file-count term (~n_buckets files PER TASK, paid in parallel, so
-        # ~constant in width) plus the narrow scan->decode, which coalesce
-        # serializes onto the write tasks. Below ~8 tasks the decode
-        # serialization dominates the files saved: measured 2.9 s at width
-        # 4 vs 2.0 s at width 16 on a 100k-row batch (64 buckets). So
-        # small batches size at per/2 rows per task, capped at the width
-        # an 8-task batch would get — big batches keep the per-task sizing
-        # (their file count feeds compaction), and per=10^9-style "one
-        # task" configs still resolve to 1.
-        n2 = -(-(2 * n_valid) // per) or 1
-        return min(n2, max(8, n1))
 
     def _finish_batch(self, batch_id: str, seq_lo: int, seq_hi: int,
                       part_stats, qn: int, m, update_global_hwm: bool,
@@ -603,7 +583,7 @@ class CdcApplyPipeline:
             return []
 
         # r6 (guide §2.6): MOR batches are order-independent by
-        # construction — shuffle-free delta APPENDS whose CAS commits
+        # construction — delta APPENDS whose CAS commits
         # rebase unconditionally and whose LWW is resolved at read — so
         # two batches can be in flight at once, the second back-filling
         # the cores the first's small-file write/commit tail leaves idle
@@ -710,7 +690,7 @@ class CdcApplyPipeline:
                     "n_dead": dead.count(), "skipped": True}
 
         src = fix_fn(active) if fix_fn is not None else active
-        dec = decode_events(src.drop("error"))
+        dec = self._expr("decoder", Decoder)(src.drop("error"))
 
         # 1) merge recovered rows FIRST (the quarantine files must still
         #    exist while this job reads them)

@@ -165,7 +165,7 @@ class _JsonStore:
     def _write(self, data: dict) -> None:
         tmp = f"{self.path}.tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            json.dump(data, f)
+            f.write(json.dumps(data))  # json.dump runs the pure-Python encoder
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, self.path)

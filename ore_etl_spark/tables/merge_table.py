@@ -191,6 +191,26 @@ def keys_eq_null_safe(alias_a: str, alias_b: str, cols: list[str]):
     return cond
 
 
+class ExprCache:
+    """``cache(key, build)``: the Column expression(s) ``build()`` makes,
+    built once per ``key``. In PySpark 4.1 every ``F.*`` call is ~5 py4j
+    round trips (call-site capture), so a batch that rebuilt its decode,
+    stats, align and bucket expressions paid ~1,500 of them; with them
+    kept, it pays only for its plan. ``key`` must name everything the
+    expressions depend on (schemas, bucket spec), so schema evolution or
+    a rebucket builds fresh ones. Kept per table / pipeline instance,
+    never process-wide."""
+
+    def __init__(self):
+        self._built: dict = {}
+
+    def __call__(self, key, build):
+        e = self._built.get(key)
+        if e is None:
+            e = self._built[key] = build()
+        return e
+
+
 @dataclass
 class MergeMetrics:
     batch_id: str
@@ -214,6 +234,7 @@ class MergeTable:
         # pipeline that never range-reads can turn it off per-process;
         # refs without bounds are simply never skipped (always correct).
         self.harvest_stats = True
+        self._expr = ExprCache()
 
     # ---------------------------------------------------------------- setup
     @classmethod
@@ -278,7 +299,7 @@ class MergeTable:
         name = f"v{snap['version']}"
         path = os.path.join(self.root, "snapshots", f"{name}.json")
         with open(path, "w") as f:
-            json.dump(snap, f)
+            f.write(json.dumps(snap))  # json.dump runs the pure-Python encoder
             f.flush()
             os.fsync(f.fileno())
         tmp = os.path.join(self.root, f".CURRENT.tmp.{uuid.uuid4().hex}")
@@ -329,17 +350,20 @@ class MergeTable:
 
     # ----------------------------------------------------------------- read
     def _align(self, df: DataFrame, target: T.StructType) -> DataFrame:
-        cols = []
-        have = {f.name: f for f in df.schema.fields}
-        for f in target.fields:
-            if f.name in have:
-                if have[f.name].dataType == f.dataType:
-                    cols.append(F.col(f.name))
+        def build():
+            cols = []
+            have = {f.name: f for f in df.schema.fields}
+            for f in target.fields:
+                if f.name in have:
+                    if have[f.name].dataType == f.dataType:
+                        cols.append(F.col(f.name))
+                    else:
+                        cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
                 else:
-                    cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return df.select(*cols)
+                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+            return cols
+
+        return df.select(*self._expr(("align", df.schema, target), build))
 
     def _read_refs(self, snap: dict, refs: list[dict], with_deleted: bool) -> DataFrame:
         full = self._stored_schema(snap)
@@ -658,10 +682,9 @@ class MergeTable:
 
     def bucket_expr(self, snap: dict | None = None):
         snap = snap or self.snapshot()
-        return F.pmod(
-            F.xxhash64(*[F.col(c) for c in snap["key_cols"]]),
-            F.lit(snap["n_buckets"]),
-        ).cast("int")
+        key_cols, n = tuple(snap["key_cols"]), snap["n_buckets"]
+        return self._expr(("bucket", key_cols, n), lambda: F.pmod(
+            F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n)).cast("int"))
 
     # ---------------------------------------------------------------- write
     def _evolved(self, snap: dict, source: DataFrame) -> dict:
@@ -708,13 +731,13 @@ class MergeTable:
         return T.StructType(self.schema(snap).fields
                             + [T.StructField(_DELETED_COL, T.BooleanType(), True)])
 
-    @staticmethod
-    def _tombstoned(df: DataFrame) -> DataFrame:
+    def _tombstoned(self, df: DataFrame) -> DataFrame:
         """Rows whose ``op`` is DELETE become tombstones."""
-        return df.withColumn(
-            _DELETED_COL,
-            (F.col(_OP_COL) == F.lit(_DELETE_OP)) if _OP_COL in df.columns
-            else F.lit(False))
+        has_op = _OP_COL in df.columns
+        return df.withColumn(_DELETED_COL, self._expr(
+            ("tombstone", has_op),
+            lambda: (F.col(_OP_COL) == F.lit(_DELETE_OP)) if has_op
+            else F.lit(False)))
 
     def _sorted_by_bucket(self, snap: dict, df: DataFrame, width: int) -> DataFrame:
         """Full-rewrite layout: one task per bucket (up to 256), rows
@@ -732,7 +755,6 @@ class MergeTable:
         self,
         source: DataFrame,
         batch_id: str,
-        write_coalesce: int | None = None,
         pre_commit=None,
     ) -> MergeMetrics:
         """Merge-on-read upsert: append delta files, resolve at read.
@@ -750,28 +772,26 @@ class MergeTable:
         a zero-row batch included. An exception from it aborts the commit
         (attempt files are dead weight, GC'able).
 
-        The write path is source -> bucketed APPEND of rows + tombstones,
-        one Spark job with NO shuffle: the batch is partitioned by bucket
-        directory but not exchanged (each task writes a file per bucket it
-        holds), and in-batch duplicates are written as they are. No
-        target-side scan, no join, no rewrite of carried rows — bytes
-        written per batch are O(batch), not O(table). This is the
-        write-optimized half of the Hudi/Paimon MOR trade: readers resolve
-        LWW across base + deltas (``read`` does a global dedupe per
-        bucket), and ``compact`` folds deltas back into one resolved file
-        set per bucket, so the cost of the trade is more, smaller delta
-        files, bounded by the compaction cadence. The returned metrics
-        carry only ``n_buckets_touched``: row outcomes are decided at read
-        time, so the append cannot count them.
+        The write path is source -> bucketed APPEND of rows + tombstones.
+        The batch is hash-exchanged on its bucket id into
+        ``min(n_buckets, defaultParallelism)`` write tasks, so every bucket
+        lands in exactly one task: the append writes ONE delta file per
+        touched bucket, with every core writing. In-batch duplicates are
+        written as they are. No target-side scan, no join, no rewrite of
+        carried rows — bytes written (and shuffled) per batch are
+        O(batch), not O(table). Without the exchange a hash-spread batch
+        puts every bucket in every scan task, so files per batch would be
+        ``tasks × n_buckets``; coalescing to one task instead writes them
+        serially on one core. The explicit partition count also keeps AQE
+        from collapsing the exchange to fewer tasks.
 
-        ``write_coalesce``: merge the batch into this many write tasks via
-        ``coalesce`` — NOT a shuffle; partitions are concatenated in
-        place. Every write task emits one file per bucket it holds, and a
-        hash-spread batch puts every bucket in every task, so delta files
-        per batch are ``tasks × n_buckets`` regardless of row count —
-        scan-width write parallelism is pure file-count amplification. The
-        caller sizes this from the batch's row count (r6; measured 2x on
-        the 1M-event apply). None writes at scan width.
+        This is the write-optimized half of the Hudi/Paimon MOR trade:
+        readers resolve LWW across base + deltas (``read`` does a global
+        dedupe per bucket), and ``compact`` folds deltas back into one
+        resolved file set per bucket, so the cost of the trade is more
+        delta files, bounded by the compaction cadence. The returned
+        metrics carry only ``n_buckets_touched``: row outcomes are decided
+        at read time, so the append cannot count them.
 
         Conditional-LWW and tombstone semantics are identical to the COW
         ``merge`` by construction: the version-ordered dedupe at read time
@@ -786,9 +806,9 @@ class MergeTable:
         def attempt(snap: dict) -> MergeMetrics:
             snap = self._evolved(snap, source)
             src = self._align(self._tombstoned(source), self._stored_schema(snap))
-            src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap))
-            if write_coalesce:
-                src = src.coalesce(max(1, int(write_coalesce)))
+            src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap)).repartition(
+                min(snap["n_buckets"], self.spark.sparkContext.defaultParallelism),
+                self._expr("bucket_col", lambda: F.col(_BUCKET_COL)))
             return self._write_and_commit(snap, batch_id, src, None,
                                           pre_commit=pre_commit)
 
@@ -1631,7 +1651,7 @@ class MergeTable:
     def _write_tags(self, t: dict) -> None:
         tmp = f"{self._tags_path()}.tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            json.dump(t, f)
+            f.write(json.dumps(t))
             f.flush()
             os.fsync(f.fileno())  # durable like _write_snapshot
         os.replace(tmp, self._tags_path())

@@ -24,13 +24,14 @@ def wal(spark, tmpdir_path):
     return path
 
 
-def build_pipeline(spark, tmpdir_path, wal_path, n_buckets=8):
+def build_pipeline(spark, tmpdir_path, wal_path, n_buckets=8, mode="cow"):
     tbl = MergeTable.create(
         spark, f"{tmpdir_path}/target", target_schema(),
         key_cols=["repo", "path"], version_cols=["commit_seq", "event_seq"],
         n_buckets=n_buckets,
     )
-    return CdcApplyPipeline(spark, wal_path, tbl, f"{tmpdir_path}/state")
+    return CdcApplyPipeline(spark, wal_path, tbl, f"{tmpdir_path}/state",
+                            mode=mode)
 
 
 def oracle_frame(spark, wal_path) -> pd.DataFrame:
@@ -118,10 +119,13 @@ def test_out_of_order_batches_converge(spark, tmpdir_path, wal):
     assert_parity(p.table, spark, wal)
 
 
-def test_schema_evolution_via_replay(spark, tmpdir_path, wal):
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_schema_evolution_via_replay(spark, tmpdir_path, wal, mode):
     """size_bytes only exists in late events: early batches must not create
-    the column, later ones must evolve the table additively."""
-    p = build_pipeline(spark, tmpdir_path, wal)
+    the column, later ones must evolve the table additively. One pipeline
+    applies both sides, so expressions it built before the evolution must
+    not be reused after it."""
+    p = build_pipeline(spark, tmpdir_path, wal, mode=mode)
     lo, hi = p.delivery_range()
     # evolution threshold: commit_seq >= 0.7 * (n_keys * max_versions);
     # normal deliveries are commit_seq*10, so split just below that point

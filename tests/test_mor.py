@@ -111,30 +111,70 @@ def test_mor_write_amplification_is_o_batch(spark, tmpdir_path, wal):
     assert n_delta > 8  # one delta dir per bucket per batch
 
 
-def test_fastpath_append_width_tracks_batch_rows(spark, tmpdir_path, wal):
-    """r6: the MOR delta append is coalesced to ceil(batch_rows /
-    mor_append_rows_per_task) write tasks — delta files per batch are
-    width x touched buckets instead of scan-width x buckets (measured 2x
-    on the 1M-event apply), with NO Exchange (coalesce concatenates
-    partitions in place) and an end state identical to the uncoalesced
-    path."""
+def test_fastpath_append_one_file_per_touched_bucket(spark, tmpdir_path, wal):
+    """The MOR delta append exchanges each batch on its bucket id into
+    min(n_buckets, defaultParallelism) write tasks: every touched bucket
+    gets exactly one delta file per batch, the files come from more than
+    one write task, and the end state matches the replay oracle."""
+    import collections
     import glob
+    import os
 
-    wide = build(spark, tmpdir_path + "/w", wal,
-                 mor_append_rows_per_task=None)  # disabled -> scan width
-    wide.run(batch_span=None)
-    narrow = build(spark, tmpdir_path + "/n", wal,
-                   mor_append_rows_per_task=10**9)  # one write task
-    narrow.run(batch_span=None)
+    p = build(spark, tmpdir_path, wal)
+    lo, hi = p.delivery_range()
+    recs = p.run(batch_span=max(1, (hi - lo) // 3))
+    assert len(recs) >= 3
+    by_batch = collections.defaultdict(list)
+    for f in glob.glob(f"{p.table.root}/data/*/_bucket=*/*.parquet"):
+        bucket_dir = os.path.dirname(f)
+        by_batch[os.path.dirname(bucket_dir)].append(
+            (bucket_dir, os.path.basename(f).split("-")[1]))
+    assert len(by_batch) == len(recs)
+    assert (sorted(len(v) for v in by_batch.values())
+            == sorted(r["n_buckets_touched"] for r in recs))
+    for files in by_batch.values():
+        dirs = [d for d, _ in files]
+        assert len(dirs) == len(set(dirs))  # one file per bucket
+    # a batch touching every bucket is written by several tasks
+    full = [files for files in by_batch.values() if len(files) == 8]
+    assert full
+    assert all(len({task for _, task in files}) > 1 for files in full)
+    parity(spark, p.table, wal)
 
-    def delta_files(pipe):
-        return len(glob.glob(f"{pipe.table.root}/**/*.parquet",
-                             recursive=True))
 
-    # one write task holds every bucket once: exactly n_buckets files
-    assert delta_files(narrow) == 8 < delta_files(wide)
-    parity(spark, narrow.table, wal)
-    cols = ["repo", "path", "commit_seq", "event_seq", "content_sha256"]
-    a = {tuple(r) for r in wide.table.read().select(*cols).collect()}
-    b = {tuple(r) for r in narrow.table.read().select(*cols).collect()}
-    assert a == b
+def test_second_tail_batch_py4j_budget(spark, tmpdir_path, wal, monkeypatch):
+    """A tail batch on a warm pipeline pays py4j round trips for its plan
+    only: the decode, stats, projection, align and bucket expressions were
+    built by the first batch. Rebuilding them costs ~1,500 round trips."""
+    import gc
+    import time
+
+    from py4j import clientserver
+
+    p = build(spark, tmpdir_path, wal)
+    lo, _ = p.delivery_range()
+    # both batches below the schema-evolution point (see
+    # test_schema_evolution_via_replay): an evolving batch builds new
+    # align and projection expressions, legitimately
+    evo = int(N_KEYS * 3 * 0.7) * 10 - 1
+    mid = (lo + evo) // 2
+    p.run_batch(lo - 1, mid)
+    calls = [0]
+    send = clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    # earlier tests' garbage is released over the wire by py4j's
+    # finalizer thread: collect it and let that thread drain first
+    gc.collect()
+    pending = spark.sparkContext._gateway._gateway_client.finalizer_deque
+    while pending:
+        time.sleep(0.01)
+    monkeypatch.setattr(clientserver.ClientServerConnection, "send_command",
+                        counted)
+    rec = p.run_batch(mid, evo)
+    monkeypatch.undo()
+    assert rec["n_in"] > 0 and rec["n_buckets_touched"] > 0
+    assert calls[0] <= 500, calls[0]

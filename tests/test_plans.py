@@ -75,14 +75,34 @@ def test_topk_uses_take_ordered(spark, wal_path):
 
 
 def test_mor_fastpath_apply_has_no_exchange(spark, wal_path, tmpdir_path):
-    """The shuffle-free delta append: read -> decode -> write, no Exchange."""
+    """read -> decode -> select is narrow (no Exchange); the MOR append
+    adds exactly one, the bucket exchange that gives each touched bucket
+    one delta file."""
     from ore_etl_spark.operators.decode import decode_events
-    from ore_etl_spark.pipeline.apply import TARGET_FIELDS
+    from ore_etl_spark.pipeline.apply import TARGET_FIELDS, target_schema
+    from ore_etl_spark.tables.merge_table import MergeTable
 
     cols = [n for n, _ in TARGET_FIELDS] + ["op"]
     df = decode_events(spark.read.parquet(wal_path)) \
         .filter(F.col("is_valid")).select(*cols)
     assert "Exchange" not in plan_of(df)
+
+    tbl = MergeTable.create(
+        spark, f"{tmpdir_path}/mor", target_schema(),
+        key_cols=["repo", "path"], version_cols=["commit_seq", "event_seq"],
+        n_buckets=8)
+    written = []
+    write = tbl._write_and_commit
+
+    def spy(snap, batch_id, out, *a, **kw):
+        written.append(out)
+        return write(snap, batch_id, out, *a, **kw)
+
+    tbl._write_and_commit = spy
+    tbl.merge_mor(df, "b1")
+    plan = plan_of(written[0])
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Exchange hashpartitioning(_bucket") == 1, plan
 
 
 def test_sessionize_single_exchange(spark):

@@ -194,6 +194,15 @@ def test_rebucket_preserves_state_and_future_merges(spark, tmpdir_path):
     s = state(tbl)
     assert s[("r", "p3")] == (2, "fixed") and s[("r", "p4")] == (1, "v4")
 
+    # so does a MOR append on the same instance: its deltas land in the
+    # new spec's buckets (a bucket expression kept from the 2-bucket spec
+    # would write them all to buckets 0-1, where lookup() never looks)
+    m3 = tbl.merge_mor(df(spark, [("r", f"p{i}", 3, 0, f"w{i}", "UPDATE")
+                                  for i in range(32)]), "b3")
+    assert m3.n_buckets_touched > 2
+    assert state(tbl) == {("r", f"p{i}"): (3, f"w{i}") for i in range(32)}
+    assert [r["content"] for r in tbl.lookup([("r", "p7")]).collect()] == ["w7"]
+
 
 def test_rebucket_resolves_mor_deltas(spark, tmpdir_path):
     tbl = make_table(spark, tmpdir_path, n_buckets=2)
