@@ -1,16 +1,21 @@
-"""In-batch last-writer-wins dedup (SURVEY A7).
+"""Last-writer-wins resolution (SURVEY A7): one survivor per key.
 
 The reference relies on Mongo's unconditional ``$set`` upsert to collapse
 duplicate deliveries (/root/reference/src/database/mongo-manager.ts:210-225),
-which is last-*arrival*-wins and therefore order-sensitive. Here dedup is an
-explicit, deterministic operator: one survivor per key, the row with the
-greatest version tuple. It MUST run before any keyed MERGE (a MERGE with two
-source matches per target row is ambiguous; Iceberg rejects it outright).
+which is last-*arrival*-wins and therefore order-sensitive. Here LWW is an
+explicit, deterministic operator. Per key, the greatest
+``struct(version cols…, arrival, row)`` wins:
 
-Implementation note (scale): ``row_number`` over
-``Window.partitionBy(keys).orderBy(desc(versions))`` is one hash shuffle on
-the key — the same shuffle the MERGE join needs, so AQE/exchange-reuse keeps
-this to a single repartitioning of the batch, not two.
+- the version tuple decides first;
+- equal versions go to the EARLIEST arrival — the reserved ``_arrival``
+  column (the WAL's ``delivery_seq``), as the replay oracle keeps the first
+  delivery. A row with no arrival (NULL, or a frame without the column)
+  counts as the earliest, so a frame without arrivals resolves exactly as
+  before arrivals existed;
+- the full row last, so verbatim duplicates have a deterministic survivor.
+
+Every ``MergeTable`` path resolves through ``dedupe_lww``: reads, compact,
+rebucket, repair, both sides of ``changes()``, and the COW merge itself.
 """
 
 from __future__ import annotations
@@ -18,63 +23,51 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# reserved input column: a row's arrival order (lower = earlier)
+ARRIVAL_COL = "_arrival"
+_NO_ARRIVAL = 2 ** 63 - 1  # the rank of a row with no arrival: the earliest
 
-def dedupe_lww(
-    df: DataFrame,
-    key_cols: list[str],
-    version_cols: list[str],
-    tie_break_cols: list[str] | None = None,
-) -> DataFrame:
-    """Keep exactly one row per key: max version tuple wins.
 
-    Implemented as a hash aggregation — ``max(struct(versions..., row))``
-    per key — NOT a row_number window. The agg gets map-side partial
-    combine (each input partition pre-collapses its duplicates before the
-    shuffle), so duplicate-heavy batches shuffle ~one row per (key,
-    partition) instead of every row, and there is no per-key sort. On
-    struct comparison Spark orders field-by-field, so appending the full
-    row after the version fields gives a deterministic survivor for
-    verbatim duplicates too.
+def dedupe_lww(df: DataFrame, key_cols: list[str], version_cols: list[str],
+               *aggs) -> DataFrame:
+    """Keep exactly one row per key, the LWW winner (see the module
+    docstring). ``aggs``: extra aggregate columns over each key's rows,
+    output after the winner's columns.
 
-    ``tie_break_cols`` (extra ordering columns after the version tuple)
-    make the winner deterministic when version tuples collide across
-    *different* rows.
+    Implemented as an aggregation — ``max(struct(...))`` per key — NOT a
+    row_number window. The agg gets map-side partial combine (each input
+    partition pre-collapses its duplicates before the shuffle), so
+    duplicate-heavy batches shuffle ~one row per (key, partition) instead
+    of every row. Spark plans it as a sort aggregate (a struct holding
+    strings cannot live in a hash-aggregate buffer), so each side sorts by
+    key, but there is no window and no per-row rank.
     """
-    order_cols = list(version_cols) + list(tie_break_cols or [])
+    order = [F.col(c).alias(f"_v{i}") for i, c in enumerate(version_cols)]
+    if ARRIVAL_COL in df.columns:
+        # max() must prefer the earliest arrival: rank by its negation
+        order.append(F.coalesce(-F.col(ARRIVAL_COL), F.lit(_NO_ARRIVAL))
+                     .alias("_a"))
     payload = [f.name for f in df.schema.fields]
-    packed = F.struct(
-        *[F.col(c).alias(f"_v{i}") for i, c in enumerate(order_cols)],
-        F.struct(*payload).alias("_row"),
-    )
-    won = df.groupBy(*key_cols).agg(F.max(packed).alias("_win"))
+    packed = F.struct(*order, F.struct(*payload).alias("_row"))
+    won = df.groupBy(*key_cols).agg(F.max(packed).alias("_win"), *aggs)
     # key columns come from the GROUPING attributes, not the struct (the
     # values are identical — every row in a group shares its key, and
     # groupBy's null-safe grouping matches the struct's carried NULLs).
-    # This keeps the aggregation's hash partitioning and sort order
-    # visible downstream, so a keyed join right after the dedup (the COW
-    # MERGE shape) reuses this exchange instead of re-shuffling and
-    # re-sorting the whole batch (guide §2.4: two operations keyed the
-    # same way share one exchange — measured one full Exchange + Sort of
-    # the batch payload removed per COW merge).
+    # This keeps the aggregation's partitioning visible downstream, so a
+    # keyed exchange right after the resolution is reused, not repeated.
     key_set = set(key_cols)
-    return won.select(*[
-        F.col(c) if c in key_set else F.col(f"_win._row.{c}").alias(c)
-        for c in payload
-    ])
+    return won.select(
+        *[F.col(c) if c in key_set else F.col(f"_win._row.{c}").alias(c)
+          for c in payload],
+        *[c for c in won.columns if c not in key_set and c != "_win"])
 
 
-def dedupe_lww_window(
-    df: DataFrame,
-    key_cols: list[str],
-    version_cols: list[str],
-    tie_break_cols: list[str] | None = None,
-) -> DataFrame:
+def dedupe_lww_window(df: DataFrame, key_cols: list[str],
+                      version_cols: list[str]) -> DataFrame:
     """row_number-window variant (SURVEY A7's literal shape); kept for
     parity tests and for when the survivor must keep input column order
     without repacking. Prefer ``dedupe_lww`` (partial-agg) in pipelines."""
     order = [F.col(c).desc_nulls_last() for c in version_cols]
-    if tie_break_cols:
-        order += [F.col(c).desc_nulls_last() for c in tie_break_cols]
     w = Window.partitionBy(*key_cols).orderBy(*order)
     return (
         df.withColumn("_lww_rn", F.row_number().over(w))

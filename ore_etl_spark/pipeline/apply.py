@@ -5,7 +5,7 @@ One batch = one delivery_seq range above the checkpoint:
     read events (delivery_seq in (lo, hi])     -- watermark-bounded scan
       -> vectorized decode (JVM expressions)    -- payload -> typed columns
       -> split valid / quarantine               -- never fail the batch
-      -> in-batch LWW dedup + conditional MERGE -- one key shuffle
+      -> LWW MERGE (touched buckets ∪ batch)    -- one bucket shuffle
       -> atomic snapshot commit w/ batch-id     -- exactly-once
       -> checkpoint hwm (global + per source partition) + metrics row
 
@@ -21,12 +21,12 @@ the head is a footer read per NEW file, with no Spark job, and a batch
 reads only the files whose bounds meet its range, with the row filter
 pushed down on top (row-group pruning, since the WAL is written in
 arrival order). Decode is narrow — no shuffle. COW's only shuffle is the
-key hash for dedup+MERGE join, with the target-side read pruned to
-touched buckets; MOR's only shuffle is the bucket exchange of the batch
-itself, so each touched bucket gets one delta file, written on every
-core. Per-batch driver work is O(buckets + partitions + new WAL files),
-never O(events), and the batch's Column expressions are built once per
-pipeline and table, not per batch.
+bucket exchange of the batch with the target rows of the buckets it
+touches, which the per-key LWW resolution reuses; MOR's only shuffle is
+the bucket exchange of the batch itself, so each touched bucket gets one
+delta file, written on every core. Per-batch driver work is O(buckets +
+partitions + new WAL files), never O(events), and the batch's Column
+expressions are built once per pipeline and table, not per batch.
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.decode import Decoder
+from ..operators.lww import ARRIVAL_COL
 from ..state.stores import CheckpointStore, MetricsLog
 from ..tables.merge_table import ExprCache, MergeTable, _pyarrow_file_bounds
 
@@ -394,17 +395,18 @@ class CdcApplyPipeline:
         watermarks, touched buckets, schema-evolution column presence),
         then the write — for MOR an append whose one exchange lays the
         batch out by bucket (one delta file per touched bucket, every core
-        writing), the dedup+MERGE job(s) for COW — plus the quarantine
-        write when the batch has invalid rows, and a compaction when the
-        MOR cadence trips. For a
-        parquet WAL the scan is planned from footer bounds (only files
-        meeting the range are read), so no listing or schema-inference
-        job precedes it. Deliberately NO ``.persist()`` of the decoded
-        frame: local-mode cache materialization serializes on the block
-        manager (measured 53 s at 32 threads vs 26 s at 8 on a 505k-event
-        batch — anti-scalable), while recomputing the narrow decode is a
-        fully parallel ~3 s. On a multi-executor cluster the same reasoning
-        holds: the decode is cheaper than the cache build + memory pressure.
+        writing), the bucket exchange and the resolve-and-write for COW —
+        plus the quarantine write when the batch has invalid rows, and a
+        compaction when the MOR cadence trips. For a parquet WAL the scan
+        is planned from footer bounds (only files meeting the range are
+        read), so no listing or schema-inference job precedes it.
+        Deliberately NO ``.persist()`` of the decoded frame: local-mode
+        cache materialization serializes on the block manager (measured
+        53 s at 32 threads vs 26 s at 8 on a 505k-event batch —
+        anti-scalable), while recomputing the narrow decode is a fully
+        parallel ~3 s. On a multi-executor cluster the same reasoning
+        holds: the decode is cheaper than the cache build + memory
+        pressure.
         """
         if bucket_slice is not None and update_global_hwm:
             # one slice never covers the whole (lo, hi] range: publishing
@@ -467,9 +469,11 @@ class CdcApplyPipeline:
             pre_commit = quarantine_fut.result
 
         # --- the write: MOR bucket-exchanged append / COW LWW MERGE ------
+        # the arrival breaks version ties in the table's LWW order
         keep, cols = self._expr(("valid", tuple(extra)), lambda: (
             F.col("is_valid"),
-            [F.col(c) for c in [n for n, _ in TARGET_FIELDS] + ["op", *extra]]))
+            [*[F.col(c) for c in [n for n, _ in TARGET_FIELDS] + ["op", *extra]],
+             F.col("delivery_seq").alias(ARRIVAL_COL)]))
         valid = decoded.filter(keep).select(*cols)
         try:
             if self.mode == "mor":
@@ -696,7 +700,8 @@ class CdcApplyPipeline:
         #    exist while this job reads them)
         extra = [c for c in self.optional_cols if c in dec.columns]
         valid_cols = [n for n, _ in TARGET_FIELDS] + ["op"]
-        recovered = dec.filter(F.col("is_valid")).select(*valid_cols, *extra)
+        recovered = dec.filter(F.col("is_valid")).select(
+            *valid_cols, *extra, F.col("delivery_seq").alias(ARRIVAL_COL))
         batch_id = batch_id or f"redrive:{self.pipeline}"
         n_rec = recovered.count()
         if n_rec > 0:

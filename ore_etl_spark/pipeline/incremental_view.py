@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..tables.merge_table import MergeTable, keys_eq_null_safe
+from ..tables.merge_table import MergeTable
 from ..state.stores import CheckpointStore
 
 
@@ -142,13 +142,14 @@ class IncrementalAggView:
             *[F.sum(F.coalesce(F.col(c).cast("double"), F.lit(0.0)))
               .alias(f"sum_{c}") for c in self.sum_cols],
         ).withColumn("_src_version", F.lit(src_ver).cast("long"))
-        # groups that vanished entirely since the previous state
-        # (null-safe anti join: a NULL group in the stored view must match
-        # the NULL group in the fresh aggregate, not be declared gone)
+        # groups that vanished entirely since the previous state. Joined on
+        # the group STRUCT, whose equality is per-field null-safe: a NULL
+        # group in the stored view must match the NULL group in the fresh
+        # aggregate, not be declared gone
+        k = F.struct(*self.group_cols)
         gone = (
-            self.table.read().alias("t")
-            .join(agg.select(*self.group_cols).alias("g"),
-                  keys_eq_null_safe("t", "g", self.group_cols), "left_anti")
+            self.table.read().withColumn("_k", k)
+            .join(agg.select(k.alias("_k")), "_k", "left_anti")
             .select(*self.group_cols)
             .withColumn("n_rows", F.lit(0).cast("long"))
         )
@@ -176,11 +177,13 @@ class IncrementalAggView:
         if not self.sum_cols:
             # without sums, an equal-count group cannot have changed
             d = d.filter(F.col("d_n") != 0)
-        cur = self.table.read().alias("v")
-        # null-safe join: a NULL-valued group must still find its stored
-        # row, or its aggregates get overwritten instead of incremented
-        j = d.alias("d").join(cur, keys_eq_null_safe("d", "v", self.group_cols),
-                              "left")
+        # joined on the group STRUCT (per-field null-safe equality): a
+        # NULL-valued group must still find its stored row, or its
+        # aggregates get overwritten instead of incremented
+        k = F.struct(*self.group_cols)
+        cur = self.table.read().withColumn("_k", k).alias("v")
+        j = d.withColumn("_k", k).alias("d").join(
+            cur, F.col("d._k") == F.col("v._k"), "left")
         new_n = F.coalesce(F.col("v.n_rows"), F.lit(0)) + F.col("d.d_n")
         cols = [F.col(f"d.{c}").alias(c) for c in self.group_cols]
         cols.append(new_n.alias("n_rows"))

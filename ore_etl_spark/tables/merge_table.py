@@ -14,8 +14,13 @@ snapshot-pointer renames. The design mirrors Iceberg's public semantics:
   At 100 TB with e.g. 4096 buckets, a batch touching 1% of keys rewrites
   ~1% of the table, and the target-side scan reads only touched buckets
   (manifest-level partition pruning).
-- **Conditional last-writer-wins MERGE**: ``WHEN MATCHED AND
-  struct(src.version) > struct(tgt.version) THEN UPDATE/DELETE`` — strictly
+- **One last-writer-wins order on every path**: per key, the greatest
+  version tuple wins, and equal versions go to the earliest arrival
+  (``operators.lww.dedupe_lww``). A COW merge folds the batch into its
+  touched buckets' rows and resolves them together; MOR reads,
+  ``compact``, ``rebucket``, repairs and ``changes()`` resolve base +
+  deltas the same way. The arrival rides the reserved ``_arrival`` input
+  column and is stored as a hidden column next to ``_deleted``. Strictly
   stronger than the reference's unconditional Mongo ``$set`` upsert
   (/root/reference/src/database/mongo-manager.ts:210-225), which silently
   lets stale replays overwrite newer state (hazard documented in the
@@ -34,10 +39,10 @@ snapshot-pointer renames. The design mirrors Iceberg's public semantics:
   snapshot stays O(window) at 10^5+ batches instead of rewriting an
   O(batches) list every commit. Replays inside the window are exact
   no-ops; a replay OLDER than the window re-applies but degrades
-  gracefully to LWW-correctness: the conditional MERGE drops every stale
-  row (COW), and MOR re-appended deltas resolve to the identical winner at
-  read time — state converges to the same answer either way, the window
-  only bounds the *wasted work*, mirroring Kafka-consumer replay-horizon
+  gracefully to LWW-correctness: its rows resolve against the stored ones
+  by the same order (a verbatim replay loses to the stored row, COW or
+  MOR) — state converges to the same answer either way, the window only
+  bounds the *wasted work*, mirroring Kafka-consumer replay-horizon
   semantics. ``n_batches_total`` keeps the full lineage count.
 - **Schema evolution**: additive columns and int→long / float→double
   widening. Snapshots carry versioned schemas; old files are read with
@@ -77,19 +82,19 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.lww import ARRIVAL_COL, dedupe_lww
+
 _BUCKET_COL = "_bucket"
 _DELETED_COL = "_deleted"
+# hidden columns stored next to the data: the tombstone flag and the
+# winning row's arrival (the LWW tie-break)
+_HIDDEN = (T.StructField(_DELETED_COL, T.BooleanType(), True),
+           T.StructField(ARRIVAL_COL, T.LongType(), True))
 # source rows whose _OP_COL equals _DELETE_OP become tombstones
 _OP_COL = "op"
 _DELETE_OP = "DELETE"
-# merge-internal per-row outcome, observed on the bucket write (never
-# written): inserted, updated (a winning delete included), or stale source
-# row; carried target rows are NULL
-_ACTION_COL = "_action"
-_INSERT, _UPDATE, _STALE = 1, 2, 3
-# merge-internal struct-of-key-columns join key (never written): the LWW
-# dedup groups by it and the resolve join joins on it, sharing one exchange
-_JK_COL = "_jk"
+# merge-internal provenance (never written): the row came from the target
+_TGT_COL = "_tgt"
 # A conflict is only raised when a PEER writer committed during our attempt
 # (classic optimistic concurrency: every retry implies system-wide
 # progress), so the retries a writer can need is bounded by its peers'
@@ -177,18 +182,6 @@ def _wider(a: str, b: str) -> str | None:
     if a == b:
         return a
     return _WIDEN.get((a, b)) or _WIDEN.get((b, a))
-
-
-def keys_eq_null_safe(alias_a: str, alias_b: str, cols: list[str]):
-    """Null-safe key-equality join condition over aliased sides. Key and
-    group columns MAY legitimately hold NULL (views grouped on nullable
-    columns); plain ``==`` silently never matches those rows, so every
-    keyed join in the engine goes through this one helper."""
-    cond = None
-    for c in cols:
-        e = F.col(f"{alias_a}.{c}").eqNullSafe(F.col(f"{alias_b}.{c}"))
-        cond = e if cond is None else (cond & e)
-    return cond
 
 
 class ExprCache:
@@ -322,7 +315,7 @@ class MergeTable:
     def is_committed(self, batch_id: str, snap: dict | None = None) -> bool:
         """Exact within the retention window (see module docstring); a
         replay older than the window returns False and re-applies — safe,
-        conditional LWW / read-time resolution converge identically."""
+        the LWW resolution converges identically."""
         snap = snap or self.snapshot()
         return batch_id in snap["applied_batch_ids"]
 
@@ -365,11 +358,13 @@ class MergeTable:
 
         return df.select(*self._expr(("align", df.schema, target), build))
 
-    def _read_refs(self, snap: dict, refs: list[dict], with_deleted: bool) -> DataFrame:
+    def _read_refs(self, snap: dict, refs: list[dict]) -> DataFrame:
+        """``refs``' stored rows, hidden columns included, aligned to the
+        snapshot's stored schema (files written before ``_arrival`` existed
+        read it as NULL)."""
         full = self._stored_schema(snap)
         if not refs:
-            return self.spark.createDataFrame(
-                [], full if with_deleted else self.schema(snap))
+            return self.spark.createDataFrame([], full)
         by_schema: dict[str, list[str]] = {}
         for r in refs:
             by_schema.setdefault(r["schema_id"], []).append(
@@ -378,25 +373,27 @@ class MergeTable:
         parts = []
         for sid, paths in by_schema.items():
             stored = T.StructType.fromJson(json.loads(snap["schemas"][sid]))
-            stored = T.StructType(
-                stored.fields + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-            )
+            stored = T.StructType(stored.fields + list(_HIDDEN))
             parts.append(self._align(self.spark.read.schema(stored).parquet(*paths), full))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-        if not with_deleted:
-            df = df.filter(~F.col(_DELETED_COL)).drop(_DELETED_COL)
         return df
 
-    def _resolve(self, snap: dict, df: DataFrame, with_deleted: bool) -> DataFrame:
-        """MOR read resolution: when delta files exist, a key may appear in
-        several files — global LWW picks the winner BEFORE tombstones are
-        filtered (filtering first would resurrect deleted keys)."""
-        if self.has_deltas(snap):
-            from ..operators.lww import dedupe_lww
-
+    def _resolved(self, snap: dict, refs: list[dict]) -> DataFrame:
+        """``refs``' rows, one per key. Only a bucket with delta refs can
+        hold a key twice, so only then does the LWW resolution run — and
+        it runs BEFORE tombstones are filtered (filtering first would
+        resurrect deleted keys)."""
+        df = self._read_refs(snap, refs)
+        if any(r.get("delta") for r in refs):
             df = dedupe_lww(df, snap["key_cols"], snap["version_cols"])
+        return df
+
+    def _read(self, snap: dict, refs: list[dict], with_deleted: bool) -> DataFrame:
+        """The public read shape: ``_arrival`` never surfaces, and
+        ``_deleted`` only with ``with_deleted``."""
+        df = self._resolved(snap, refs).drop(ARRIVAL_COL)
         if not with_deleted:
             df = df.filter(~F.col(_DELETED_COL)).drop(_DELETED_COL)
         return df
@@ -489,8 +486,7 @@ class MergeTable:
         committed at or before wall-clock ``as_of_ts`` (TIMESTAMP AS OF
         parity); snapshots are immutable, so both reads are stable."""
         snap = self._snap_for(version, as_of_ts)
-        raw = self._read_refs(snap, snap["refs"], with_deleted=True)
-        return self._resolve(snap, raw, with_deleted)
+        return self._read(snap, snap["refs"], with_deleted)
 
     def read_buckets(self, bucket_ids: list[int], with_deleted: bool = False,
                      version: int | None = None,
@@ -506,9 +502,8 @@ class MergeTable:
             raise ValueError("pass either snap or version/as_of_ts, not both")
         snap = snap or self._snap_for(version, as_of_ts)
         want = set(bucket_ids)
-        refs = [r for r in snap["refs"] if r["bucket"] in want]
-        raw = self._read_refs(snap, refs, with_deleted=True)
-        return self._resolve(snap, raw, with_deleted)
+        return self._read(snap, [r for r in snap["refs"] if r["bucket"] in want],
+                          with_deleted)
 
     def prune_refs(self, snap: dict, col: str, lo=None, hi=None) -> tuple[list[dict], int]:
         """Manifest-bounds file skipping: keep only refs whose [min,max] for
@@ -577,8 +572,7 @@ class MergeTable:
         snap = self._snap_for(version, as_of_ts)
         refs, _ = self.prune_refs(snap, col, lo, hi)
         refs = self._expand_file_refs(snap, refs, col, lo, hi)
-        raw = self._read_refs(snap, refs, with_deleted=True)
-        df = self._resolve(snap, raw, with_deleted)
+        df = self._read(snap, refs, with_deleted)
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:
@@ -726,10 +720,9 @@ class MergeTable:
         return snap
 
     def _stored_schema(self, snap: dict) -> T.StructType:
-        """The table schema as written to files: data columns + tombstone
-        flag."""
-        return T.StructType(self.schema(snap).fields
-                            + [T.StructField(_DELETED_COL, T.BooleanType(), True)])
+        """The table schema as written to files: data columns + the hidden
+        tombstone flag and arrival."""
+        return T.StructType(self.schema(snap).fields + list(_HIDDEN))
 
     def _tombstoned(self, df: DataFrame) -> DataFrame:
         """Rows whose ``op`` is DELETE become tombstones."""
@@ -793,10 +786,9 @@ class MergeTable:
         metrics carry only ``n_buckets_touched``: row outcomes are decided
         at read time, so the append cannot count them.
 
-        Conditional-LWW and tombstone semantics are identical to the COW
-        ``merge`` by construction: the version-ordered dedupe at read time
-        picks the same winner the conditional MERGE would have kept, and a
-        tombstone with the greatest version wins the same way. Exactly-once
+        Reads resolve with the same LWW order as the COW ``merge``
+        (``dedupe_lww``: version, then earliest ``_arrival``), so both
+        modes converge to the same state, tombstones included. Exactly-once
         batch-id manifests are shared with the COW path.
 
         Multi-writer safe: delta appends REBASE onto any concurrently
@@ -841,16 +833,13 @@ class MergeTable:
         and with ``rows_per_file`` set, each bucket splits into several
         range-disjoint files whose per-file footer bounds let
         ``read_where`` open O(1) files per bucket for a narrow range."""
-        from ..operators.lww import dedupe_lww
-
         def attempt(snap: dict) -> MergeMetrics:
             dirty = {r["bucket"] for r in snap["refs"]
                      if r.get("delta") or not retain_tombstones}
             if not dirty:
                 return self._write_and_commit(snap, batch_id, None, set())
-            refs = [r for r in snap["refs"] if r["bucket"] in dirty]
-            resolved = dedupe_lww(self._read_refs(snap, refs, with_deleted=True),
-                                  snap["key_cols"], snap["version_cols"])
+            resolved = self._resolved(
+                snap, [r for r in snap["refs"] if r["bucket"] in dirty])
             if not retain_tombstones:
                 resolved = resolved.filter(~F.col(_DELETED_COL))
             return self._write_and_commit(
@@ -872,15 +861,8 @@ class MergeTable:
         snapshots' own n_buckets. Idempotent by batch_id. A global
         restructure commits EXCLUSIVELY — it never rebases; racing with any
         concurrent commit recomputes from the fresh snapshot."""
-        from ..operators.lww import dedupe_lww
-
         def attempt(snap: dict) -> MergeMetrics:
-            # raw refs read + ONE LWW resolution (read() would already
-            # resolve deltas; resolving twice doubles the most expensive
-            # stage)
-            resolved = self._read_refs(snap, snap["refs"], with_deleted=True)
-            if self.has_deltas(snap):
-                resolved = dedupe_lww(resolved, snap["key_cols"], snap["version_cols"])
+            resolved = self._resolved(snap, snap["refs"])
             old_buckets = {r["bucket"] for r in snap["refs"]}
             snap = {**snap, "n_buckets": int(n_buckets)}
             return self._write_and_commit(
@@ -896,18 +878,26 @@ class MergeTable:
         touched_buckets: list[int] | None = None,
         pre_commit=None,
     ) -> MergeMetrics:
-        """Conditional-LWW MERGE of `source` into the table.
+        """Last-writer-wins MERGE of `source` into the table.
 
-        `source` must contain key + version columns; duplicates per key are
-        resolved first (in-batch LWW — mandatory before any keyed merge,
-        mirroring SURVEY A7). Rows whose ``op`` column is ``DELETE`` become
-        tombstones. New columns and widened types evolve the table schema;
-        a type change no widening covers (key columns included) raises
-        ``ValueError`` before anything is written. Idempotent by `batch_id`.
+        `source` must contain key + version columns; it may hold several
+        rows per key. Rows whose ``op`` column is ``DELETE`` become
+        tombstones; an ``_arrival`` column, when present, breaks version
+        ties (earliest wins). New columns and widened types evolve the
+        table schema; a type change no widening covers (key columns
+        included) raises ``ValueError`` before anything is written.
+        Idempotent by `batch_id`.
 
-        The returned insert/update/stale/delete counts (and the lineage
-        row) are observed on the bucket write itself (``DataFrame.observe``
-        in the write's result stage): no extra Spark job, no cached frame.
+        The merge is one resolution: the target rows of the touched buckets
+        (base and deltas) and the aligned batch are resolved together by
+        ``dedupe_lww`` and the touched buckets rewritten from the winners.
+        A provenance flag is the resolved row's last field, so it only
+        separates byte-identical rows: a verbatim replay resolves to the
+        stored row and counts as stale. The returned insert/update/stale/
+        delete counts (and the lineage row) come from the winner's
+        provenance and per-key has-source/has-target flags, observed on
+        the bucket write itself (``DataFrame.observe``): no extra Spark
+        job, no cached frame.
 
         ``pre_commit``: zero-arg callable run after the bucket write,
         before the snapshot CAS (see ``merge_mor`` — the quarantine-write
@@ -926,125 +916,43 @@ class MergeTable:
         a bucket-overlap conflict the whole merge recomputes against the
         fresh snapshot (bounded retries).
         """
-        from ..operators.lww import dedupe_lww
-
         def attempt(snap: dict) -> MergeMetrics:
             snap = self._evolved(snap, source)
-            key_cols = snap["key_cols"]
-            version_cols = snap["version_cols"]
-
-            # --- in-batch LWW dedup (one survivor per key) ---------------
-            # r6 (guide §2.4: share one exchange): the dedup groups by a
-            # single STRUCT of the key columns (struct equality/grouping is
-            # per-field null-safe, so the groups — and the surviving rows —
-            # are identical to dedupe_lww's multi-column form), the struct
-            # rides through the alignment as a pass-through column, and the
-            # resolve join below joins ON that struct attribute with plain
-            # equality. The old shape joined with per-column eqNullSafe,
-            # which Spark rewrites to (coalesce(k, default), isnull(k)) join
-            # keys — derived expressions the dedup's hash partitioning can
-            # never satisfy, so the whole deduped batch re-shuffled AND
-            # re-sorted between the aggregate and the join. With the struct
-            # as both the grouping attribute and the join key,
-            # EnsureRequirements reuses the dedup's exchange and the
-            # sort-aggregate's ordering: one full Exchange + Sort of the
-            # batch payload removed per merge.
-            payload = source.columns
-            packed = F.struct(
-                *[F.col(c).alias(f"_v{i}") for i, c in enumerate(version_cols)],
-                F.struct(*payload).alias("_row"),
-            )
-            src = self._tombstoned(
-                source.groupBy(
-                    F.struct(*[F.col(c) for c in key_cols]).alias(_JK_COL))
-                .agg(F.max(packed).alias("_win"))
-                .select(F.col(_JK_COL),
-                        *[F.col(f"_win._row.{c}").alias(c) for c in payload])
-            )
-            # the align target carries _JK_COL with src's OWN struct type
-            # so _align passes the attribute through uncast (a cast would
-            # break the partitioning's expression identity and
-            # re-introduce the exchange); when key-column types differ
-            # across sides they can only differ by a lossless widening
-            # (_evolved rejects any other change), and the join inserts
-            # that cast instead — correct, the reuse is just lost for that
-            # rare batch
-            src = self._align(src, self._stored_schema(snap).add(src.schema[_JK_COL]))
+            src = self._align(self._tombstoned(source), self._stored_schema(snap))
             src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap))
-
-            # --- bucket pruning ------------------------------------------
             if touched_buckets is not None:
-                touched = sorted(touched_buckets)
+                touched = set(touched_buckets)
             else:
-                touched = sorted(
-                    r[_BUCKET_COL]
-                    for r in src.select(_BUCKET_COL).distinct().collect()
-                )
+                touched = {r[_BUCKET_COL]
+                           for r in src.select(_BUCKET_COL).distinct().collect()}
             if not touched:
                 # an all-invalid batch commits nothing but its id
                 return self._write_and_commit(snap, batch_id, None, set(),
                                               pre_commit=pre_commit)
 
-            tgt_refs = [r for r in snap["refs"] if r["bucket"] in set(touched)]
-            tgt = self._read_refs(snap, tgt_refs, with_deleted=True)
-            if self.has_deltas(snap):
-                # unresolved MOR deltas would give >1 target row per key
-                # and explode the outer join — resolve them first
-                tgt = dedupe_lww(tgt, key_cols, version_cols)
+            tgt = self._read_refs(
+                snap, [r for r in snap["refs"] if r["bucket"] in touched])
             tgt = tgt.withColumn(_BUCKET_COL, self.bucket_expr(snap))
-            tgt = tgt.withColumn(_JK_COL,
-                                 F.struct(*[F.col(c) for c in key_cols]))
-
-            # --- resolve: full outer join on key, conditional LWW --------
-            # presence markers + null-safe key equality: key columns MAY
-            # hold NULL (e.g. a view table grouped on a nullable column) —
-            # deriving presence from key nullability would mis-classify
-            # those rows and plain equality would never match them.
-            # Equality on the key STRUCT is per-field null-safe (verified:
-            # struct(NULL,'x') = struct(NULL,'x') is true) and lets the
-            # join reuse the dedup's exchange — see the dedup comment.
-            src = src.withColumn("_s_mark", F.lit(True))
-            tgt = tgt.withColumn("_t_mark", F.lit(True))
-            j = src.alias("s").join(tgt.alias("t"),
-                                    F.col(f"s.{_JK_COL}") == F.col(f"t.{_JK_COL}"),
-                                    "full_outer")
-
-            s_ver = F.struct(*[F.col(f"s.{c}") for c in version_cols])
-            t_ver = F.struct(*[F.col(f"t.{c}") for c in version_cols])
-            s_present = F.col("s._s_mark").isNotNull()
-            t_present = F.col("t._t_mark").isNotNull()
-            take_src = s_present & (~t_present | (s_ver > t_ver))
-
-            merged = j.select(
-                *[F.when(take_src, F.col(f"s.{f.name}"))
-                  .otherwise(F.col(f"t.{f.name}")).alias(f.name)
-                  for f in self._stored_schema(snap).fields],
-                F.coalesce(F.col(f"s.{_BUCKET_COL}"), F.col(f"t.{_BUCKET_COL}"))
-                .alias(_BUCKET_COL),
-                F.when(take_src & ~t_present, F.lit(_INSERT))
-                .when(take_src & t_present, F.lit(_UPDATE))
-                .when(s_present & ~(s_ver > t_ver), F.lit(_STALE))
-                .cast("byte").alias(_ACTION_COL),
-            )
-
-            # --- row counts ride the bucket write ------------------------
-            # observed after the repartition, so they are collected in the
-            # write's own result stage; a fresh Observation per attempt (one
-            # can only be used once)
-            act = F.col(_ACTION_COL)
-            obs = Observation()
-            out = (
-                merged.repartition(max(1, min(len(touched), 200)),
-                                   F.col(_BUCKET_COL))
-                .observe(obs,
-                         F.count_if(act == _INSERT).alias("n_inserted"),
-                         F.count_if(act == _UPDATE).alias("n_updated"),
-                         F.count_if(act == _STALE).alias("n_stale_ignored"),
-                         F.count_if(act.isin(_INSERT, _UPDATE)
-                                    & F.col(_DELETED_COL)).alias("n_deleted"))
-                .drop(_ACTION_COL)
-            )
-            return self._write_and_commit(snap, batch_id, out, set(touched),
+            # one exchange lays the rows out by bucket; the resolution
+            # groups by (bucket, key), which that layout already satisfies
+            both = (src.withColumn(_TGT_COL, F.lit(False))
+                    .unionByName(tgt.withColumn(_TGT_COL, F.lit(True)))
+                    .repartition(min(len(touched), 200), F.col(_BUCKET_COL)))
+            tgt_flag = F.col(_TGT_COL)
+            won = dedupe_lww(both, [_BUCKET_COL, *snap["key_cols"]],
+                             snap["version_cols"],
+                             F.max(~tgt_flag).alias("_has_src"),
+                             F.max(tgt_flag).alias("_has_tgt"))
+            from_src = ~tgt_flag
+            obs = Observation()  # one per attempt: it can only be used once
+            out = won.observe(
+                obs,
+                F.count_if(from_src & ~F.col("_has_tgt")).alias("n_inserted"),
+                F.count_if(from_src & F.col("_has_tgt")).alias("n_updated"),
+                F.count_if(tgt_flag & F.col("_has_src")).alias("n_stale_ignored"),
+                F.count_if(from_src & F.col(_DELETED_COL)).alias("n_deleted"),
+            ).drop(_TGT_COL, "_has_src", "_has_tgt")
+            return self._write_and_commit(snap, batch_id, out, touched,
                                           pre_commit=pre_commit,
                                           counts=lambda: obs.get)
 
@@ -1451,12 +1359,8 @@ class MergeTable:
 
             # job 2: rewrite only the touched buckets (LWW-resolved, so the
             # new file can replace base + delta refs for those buckets)
-            tgt_refs = [r for r in snap["refs"] if r["bucket"] in touched]
-            cur = self._read_refs(snap, tgt_refs, with_deleted=True)
-            if self.has_deltas(snap):
-                from ..operators.lww import dedupe_lww
-
-                cur = dedupe_lww(cur, snap["key_cols"], snap["version_cols"])
+            cur = self._resolved(
+                snap, [r for r in snap["refs"] if r["bucket"] in touched])
             fixed = cur.withColumn(_BUCKET_COL, self.bucket_expr(snap))
             for col, expr in assignments.items():
                 fixed = fixed.withColumn(
@@ -1509,7 +1413,6 @@ class MergeTable:
                 "from_version must not exceed to_version"
             )
         key_cols = snap_b["key_cols"]
-        version_cols = snap_b["version_cols"]
         target = self.schema(snap_b)
         full = self._stored_schema(snap_b)
         out_schema = T.StructType(
@@ -1525,29 +1428,29 @@ class MergeTable:
         if not changed:
             return self.spark.createDataFrame([], out_schema)
 
-        from ..operators.lww import dedupe_lww
+        def side(snap: dict) -> DataFrame:
+            # the key STRUCT is the join key: struct equality is per-field
+            # null-safe (struct(NULL,'x') = struct(NULL,'x') is true), and
+            # the struct itself is never NULL, so it also marks presence
+            df = self._resolved(snap, [r for r in snap["refs"]
+                                       if r["bucket"] in changed])
+            return self._align(df, full).withColumn("_k", F.struct(*key_cols))
 
-        def side(snap: dict, mark: str) -> DataFrame:
-            refs = [r for r in snap["refs"] if r["bucket"] in changed]
-            df = self._read_refs(snap, refs, with_deleted=True)
-            if any(r.get("delta") for r in refs):
-                df = dedupe_lww(df, key_cols, version_cols)
-            return self._align(df, full).withColumn(mark, F.lit(True))
+        j = side(snap_a).alias("a").join(
+            side(snap_b).alias("b"), F.col("a._k") == F.col("b._k"), "full_outer")
 
-        a = side(snap_a, "_a_mark").alias("a")
-        b = side(snap_b, "_b_mark").alias("b")
-        j = a.join(b, keys_eq_null_safe("a", "b", key_cols), "full_outer")
-
-        a_p = F.col("a._a_mark").isNotNull()
-        b_p = F.col("b._b_mark").isNotNull()
-        a_live = a_p & ~F.coalesce(F.col(f"a.{_DELETED_COL}"), F.lit(False))
-        b_live = b_p & ~F.coalesce(F.col(f"b.{_DELETED_COL}"), F.lit(False))
+        a_live = (F.col("a._k").isNotNull()
+                  & ~F.coalesce(F.col(f"a.{_DELETED_COL}"), F.lit(False)))
+        b_live = (F.col("b._k").isNotNull()
+                  & ~F.coalesce(F.col(f"b.{_DELETED_COL}"), F.lit(False)))
         # full-row null-safe comparison, not just version cols: a repair
         # (update_where) rewrites values WITHOUT bumping versions — the
         # changelog must still emit those as updates or downstream
-        # consumers/views silently diverge from the table
-        a_row = F.struct(*[F.col(f"a.{f.name}") for f in full.fields])
-        b_row = F.struct(*[F.col(f"b.{f.name}") for f in full.fields])
+        # consumers/views silently diverge from the table. The arrival is
+        # left out: the same row re-won by an earlier delivery is no change
+        cmp = [f.name for f in full.fields if f.name != ARRIVAL_COL]
+        a_row = F.struct(*[F.col(f"a.{c}") for c in cmp])
+        b_row = F.struct(*[F.col(f"b.{c}") for c in cmp])
         changed_ver = ~a_row.eqNullSafe(b_row)
 
         def img(alias: str, ctype: str, when):

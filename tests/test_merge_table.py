@@ -233,9 +233,9 @@ def test_raising_pre_commit_aborts_the_commit(spark, tmpdir_path, kind, n_rows):
 
 def test_cow_merge_counts_ride_the_write(spark, tmpdir_path):
     """Insert/update/stale/delete counts are observed on the bucket write:
-    with the touched buckets given, the merge runs the 4 jobs its write
-    needs (the source and target shuffles, the bucket shuffle, the write)
-    and none more for counting."""
+    with the touched buckets given, the merge runs the 2 jobs its write
+    needs (the bucket exchange of target rows ∪ batch, then the resolve
+    and write) and none more for counting."""
     tbl = make_table(spark, tmpdir_path)
     tbl.merge(df(spark, [("a", "x", 5, 0, "v", "INSERT"),
                          ("a", "y", 1, 0, "v", "INSERT"),
@@ -255,4 +255,4 @@ def test_cow_merge_counts_ride_the_write(spark, tmpdir_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert (m.n_inserted, m.n_updated, m.n_stale_ignored, m.n_deleted) == \
         (1, 2, 1, 1)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2

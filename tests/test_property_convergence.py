@@ -1,7 +1,8 @@
 """Property-based convergence: for ANY partitioning of the delivery range
 into batches, applied in ANY order, with ANY subset replayed again, the
 converged table equals the oracle (the exactly-once + conditional-LWW
-contract, stated as a property rather than fixed cases)."""
+contract, stated as a property rather than fixed cases). The WAL carries
+equal-version conflicts, so any batching also covers arrival tie-breaks."""
 
 import shutil
 import tempfile
@@ -15,13 +16,16 @@ from ore_etl_spark.datagen.wal import generate_wal, replay_oracle
 from ore_etl_spark.pipeline.apply import CdcApplyPipeline, target_schema
 from ore_etl_spark.tables.merge_table import MergeTable
 
+from tests.tie_events import add_tie_conflicts
+
 N_KEYS = 120
 
 
 @pytest.fixture(scope="module")
 def wal_fixture(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("prop") / "wal")
-    generate_wal(spark, n_keys=N_KEYS, n_partitions=2).write.parquet(path)
+    add_tie_conflicts(spark, generate_wal(spark, n_keys=N_KEYS, n_partitions=2)) \
+        .write.parquet(path)
     pdf = spark.read.parquet(path).toPandas()
     lo = int(pdf["delivery_seq"].min())
     hi = int(pdf["delivery_seq"].max())
