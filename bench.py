@@ -603,7 +603,7 @@ def run_writers(args):
                     bucket_slices=w if sliced else None)
                 load0 = _loadavg()
                 t0 = time.time()
-                runner.run_concurrent(n_workers=w)
+                runner.run(n_workers=w)
                 wall = time.time() - t0
                 fp = fingerprint(pipe.table)
                 fps.add(fp)

@@ -79,8 +79,7 @@ def cmd_backfill(args):
     stale = 0.0 if args.workers <= 1 else args.stale_after
     bf = BackfillRunner(pipe, f"{args.state}/chunks.json", args.chunk_size,
                         stale_after_s=stale)
-    done = (bf.run_concurrent(n_workers=args.workers)
-            if args.workers > 1 else bf.run())
+    done = bf.run(n_workers=args.workers)
     print(json.dumps({"chunks_completed": len(done),
                       "table_version": pipe.table.version}))
 

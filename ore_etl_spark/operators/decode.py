@@ -5,16 +5,15 @@ little-endian binary struct reads, regex log extraction
 (/root/reference/src/parsers/instruction-parser.ts:21-81,
  src/parsers/log-parser.ts:85-216). Here the same surface is columnar:
 
-- **JVM fast path** (default, zero Python): ``unbase64`` -> binary,
+- **JVM fast path** (zero Python): ``unbase64`` -> binary,
   little-endian header fields via hex byte-swap + ``conv``, body slice via
   binary ``substring``, UTF-8 via ``cast(string)``, integrity via length
   checks, ``sha2(content, 256)`` for the per-row invariant. Whole-stage
   codegen keeps this inside one pipeline with the scan.
-- **pandas-UDF path** (Arrow-batched) mirroring the reference's decode
-  shape exactly — base64 *and* base58 front-ends, ``struct.unpack``-style
-  LE reads — for operators a JVM expression can't express (base58 has no
-  built-in). Used by tests to prove both paths agree, and kept as the
-  template for future binary layouts (reference D3/D13).
+
+The tests hold an independent pandas path (``tests/oracles.py``:
+``mapInPandas`` over the Python decode, plus base58 UDFs) and assert both
+paths agree bit for bit.
 
 Malformed payloads never fail the batch: they get ``is_valid=false`` and
 are routed to the quarantine table by the apply pipeline (reference per-tx
@@ -23,16 +22,8 @@ try/catch + DLQ, transaction-consumer.ts:145-174).
 
 from __future__ import annotations
 
-import base64
-import struct
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_B58_ALPHABET = "123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
-_B58_INDEX = {c: i for i, c in enumerate(_B58_ALPHABET)}
 
 
 def _le_u32(bin_col: F.Column, offset: int) -> F.Column:
@@ -101,104 +92,3 @@ class Decoder:
 def decode_events(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Attach decoded columns (JVM fast path); see ``Decoder``."""
     return Decoder(payload_col)(df)
-
-
-# ---------------------------------------------------------------------------
-# pandas-UDF path (Arrow-batched; the reference-parity decoder)
-# ---------------------------------------------------------------------------
-
-_DECODE_SCHEMA = (
-    "payload_version long, content string, content_len long, "
-    "content_sha256 string, is_valid boolean"
-)
-
-
-def _decode_one(p) -> tuple:
-    import hashlib
-
-    if p is None:
-        return (None, None, None, None, False)
-    try:
-        raw = base64.b64decode(p, validate=True)
-        if len(raw) < 8:
-            return (None, None, None, None, False)
-        version, length = struct.unpack("<II", raw[:8])
-        body = raw[8:]
-        if len(body) != length:
-            return (None, None, None, None, False)
-        content = body.decode("utf-8")
-        return (version, content, length,
-                hashlib.sha256(body).hexdigest(), True)
-    except Exception:
-        return (None, None, None, None, False)
-
-
-def decode_events_pandas(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Same decode via mapInPandas (Arrow batches, no per-row Python UDF).
-
-    Kept as the template for binary layouts with no JVM expression
-    (reference base58 path, D3/D13); tests assert bit-parity with
-    ``decode_events``.
-    """
-    out_fields = ["payload_version", "content", "content_len",
-                  "content_sha256", "is_valid"]
-    in_schema = df.schema
-    out_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in in_schema.fields
-    ) + ", " + _DECODE_SCHEMA
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [_decode_one(p) for p in pdf[payload_col]]
-            cols = list(zip(*decoded)) if decoded else [[] for _ in out_fields]
-            for i, name in enumerate(out_fields):
-                pdf[name] = pd.Series(cols[i], index=pdf.index, dtype="object")
-            pdf["is_valid"] = pdf["is_valid"].astype(bool)
-            yield pdf
-
-    return df.mapInPandas(fn, schema=out_ddl)
-
-
-# ---------------------------------------------------------------------------
-# base58 (reference parity: instruction-parser.ts:66-81, pubkey-converter.ts)
-# ---------------------------------------------------------------------------
-
-def b58decode_py(s: str) -> bytes | None:
-    try:
-        n = 0
-        for ch in s:
-            n = n * 58 + _B58_INDEX[ch]
-        nbytes = max(1, (n.bit_length() + 7) // 8)
-        out = n.to_bytes(nbytes, "big")
-        pad = len(s) - len(s.lstrip("1"))
-        return b"\x00" * pad + out.lstrip(b"\x00") if n else b"\x00" * len(s)
-    except KeyError:
-        return None
-
-
-def b58encode_py(b: bytes) -> str:
-    n = int.from_bytes(b, "big")
-    out = ""
-    while n:
-        n, r = divmod(n, 58)
-        out = _B58_ALPHABET[r] + out
-    pad = len(b) - len(b.lstrip(b"\x00"))
-    return "1" * pad + out
-
-
-def b58decode_udf():
-    """Arrow-vectorized base58 decode (lazy: pandas_udf needs a session)."""
-
-    @F.pandas_udf("binary")
-    def _udf(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: b58decode_py(x) if x is not None else None)
-
-    return _udf
-
-
-def b58encode_udf():
-    @F.pandas_udf("string")
-    def _udf(b: pd.Series) -> pd.Series:
-        return b.map(lambda x: b58encode_py(x) if x is not None else None)
-
-    return _udf

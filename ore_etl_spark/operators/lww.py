@@ -20,7 +20,7 @@ rebucket, repair, both sides of ``changes()``, and the COW merge itself.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # reserved input column: a row's arrival order (lower = earlier)
@@ -60,17 +60,3 @@ def dedupe_lww(df: DataFrame, key_cols: list[str], version_cols: list[str],
         *[F.col(c) if c in key_set else F.col(f"_win._row.{c}").alias(c)
           for c in payload],
         *[c for c in won.columns if c not in key_set and c != "_win"])
-
-
-def dedupe_lww_window(df: DataFrame, key_cols: list[str],
-                      version_cols: list[str]) -> DataFrame:
-    """row_number-window variant (SURVEY A7's literal shape); kept for
-    parity tests and for when the survivor must keep input column order
-    without repacking. Prefer ``dedupe_lww`` (partial-agg) in pipelines."""
-    order = [F.col(c).desc_nulls_last() for c in version_cols]
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    return (
-        df.withColumn("_lww_rn", F.row_number().over(w))
-        .filter(F.col("_lww_rn") == 1)
-        .drop("_lww_rn")
-    )

@@ -495,14 +495,6 @@ class CdcApplyPipeline:
         if quarantine_fut is not None:
             quarantine_fut.result()  # raises a failed write the merge skipped
 
-        return self._finish_batch(batch_id, seq_lo, seq_hi, part_stats, qn,
-                                  m, update_global_hwm, t0)
-
-    def _finish_batch(self, batch_id: str, seq_lo: int, seq_hi: int,
-                      part_stats, qn: int, m, update_global_hwm: bool,
-                      t0: float) -> dict:
-        """Post-commit tail shared by the sequential and concurrent batch
-        paths: checkpoint watermarks, then the metrics record."""
         # checkpoint AFTER commit: replay of (lo,hi] is a snapshot-level
         # no-op. Monotone: concurrent chunk processors finish out of order
         # and must never drag a watermark hint backwards.
@@ -545,27 +537,35 @@ class CdcApplyPipeline:
         return rec
 
     # ------------------------------------------------------------------
-    def run(self, batch_span: int | None = None, max_batches: int | None = None,
-            pipelined: bool | None = None) -> list[dict]:
-        """Catch up from the checkpoint to the current WAL head.
+    def run(self, batch_span: int | None = None,
+            max_batches: int | None = None) -> list[dict]:
+        """Catch up from the checkpoint to the current WAL head, one
+        ``run_batch`` per ``batch_span``-wide range, in range order.
 
-        ``pipelined``: prefetch batch N+1's stats pass on a worker thread
-        while batch N's MERGE runs — Spark schedules the two jobs
-        concurrently, hiding the stats job behind the (heavier) merge.
-        Reference parity: the transformer's fetch-ahead
-        (transaction-transformer.ts:319,341). Correctness is unaffected
-        (the stats pass is read-only; commits stay strictly ordered), but
-        only enable it when executors have spare slots during the merge —
+        Below 16 scheduler slots the ranges run one at a time on the
+        calling thread. At 16 or more (r6, guide §2.6) the next range's
+        work starts ahead of its turn on a worker thread, back-filling the
+        cores the current batch's serial write/commit tail leaves idle —
         on a saturated cluster two concurrent jobs just split the same
-        cores (measured 47% slower at local[2]). Default ``None`` (r6,
-        guide §2.6): auto-enable at >= 16 scheduler slots, where the
-        merge's serial write/commit tail leaves cores idle that the
-        prefetch back-fills; small-parallelism runs stay sequential.
+        cores (measured 47% slower at local[2]). What runs ahead:
+
+        - a whole MOR batch, when no compaction cadence can trip
+          mid-stream (two threads could race redundant compacts). Delta
+          appends commit in any order — their CAS always rebases and LWW
+          resolves at read — so two batches are in flight (measured
+          20.2 s -> ~16 s on the 1M-event 4-batch bench at 32 CPUs). The
+          early batch leaves the global hwm alone; this thread publishes
+          each range's seq_hi in range order, once every range before it
+          is applied, so a crash can only leave the hwm at a fully-applied
+          prefix.
+        - otherwise (COW merges read the parent snapshot, so concurrent
+          COW batches would just recompute under CommitConflict) only the
+          read-only stats pass, which the range's ``run_batch`` then
+          takes; commits stay strictly ordered. Reference parity: the
+          transformer's fetch-ahead (transaction-transformer.ts:319,341).
         """
         from concurrent.futures import ThreadPoolExecutor
 
-        if pipelined is None:
-            pipelined = self.spark.sparkContext.defaultParallelism >= 16
         self.quarantine_malformed_source()
         lo_all, hi_all = self.delivery_range()
         if hi_all is None:  # empty WAL — nothing to apply
@@ -577,55 +577,35 @@ class CdcApplyPipeline:
 
         ranges = []
         cur = hwm
-        n = 0
-        while cur < hi_all and (max_batches is None or n < max_batches):
-            hi = min(cur + span, hi_all)
-            ranges.append((cur, hi))
-            cur = hi
-            n += 1
-        if not ranges:
-            return []
+        while cur < hi_all and (max_batches is None or len(ranges) < max_batches):
+            ranges.append((cur, min(cur + span, hi_all)))
+            cur = ranges[-1][1]
 
-        # r6 (guide §2.6): MOR batches are order-independent by
-        # construction — delta APPENDS whose CAS commits
-        # rebase unconditionally and whose LWW is resolved at read — so
-        # two batches can be in flight at once, the second back-filling
-        # the cores the first's small-file write/commit tail leaves idle
-        # (measured 20.2 s -> ~16 s on the 1M-event 4-batch bench). The
-        # global hwm ("everything <= hwm applied") still only ever
-        # advances over the CONTIGUOUS completed prefix: workers run with
-        # update_global_hwm=False and the main thread publishes after
-        # batch i resolves, at which point 0..i are all complete — a
-        # crash mid-flight can only leave the hwm at a fully-applied
-        # prefix (replays are snapshot-level no-ops). COW stays
-        # sequential: its merges read the parent snapshot, so concurrent
-        # COW batches would just recompute under CommitConflict.
-        if (self.mode == "mor" and len(ranges) > 1
-                and self.compact_every is None and self.compact_depth is None
-                and self.spark.sparkContext.defaultParallelism >= 16):
-            # (mid-stream auto-compaction stays sequential: two threads
-            # could both trip the cadence and race redundant compacts)
-            results = []
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [pool.submit(self.run_batch, lo, hi,
-                                    update_global_hwm=False)
-                        for lo, hi in ranges]
-                for (lo, hi), fut in zip(ranges, futs):
-                    results.append(fut.result())
-                    self.checkpoints.set(self.pipeline, hi, monotone=True)
-            return results
+        width = 2 if self.spark.sparkContext.defaultParallelism >= 16 else 1
+        whole = (self.mode == "mor" and self.compact_every is None
+                 and self.compact_depth is None)
 
-        if not pipelined or len(ranges) == 1:
-            return [self.run_batch(lo, hi) for lo, hi in ranges]
+        def early(lo: int, hi: int):
+            if whole:
+                return self.run_batch(lo, hi, update_global_hwm=False)
+            return self._stats_phase(lo, hi)
 
         results = []
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(self._stats_phase, *ranges[0])
+        ahead = {}  # range index -> future of its early work
+        # threads start on the first submit: none at width 1
+        with ThreadPoolExecutor(max_workers=width) as pool:
             for i, (lo, hi) in enumerate(ranges):
-                stats = fut.result()
-                if i + 1 < len(ranges):
-                    fut = pool.submit(self._stats_phase, *ranges[i + 1])
-                results.append(self.run_batch(lo, hi, stats=stats))
+                for j in range(i + 1, min(i + width, len(ranges))):
+                    if j not in ahead:
+                        ahead[j] = pool.submit(early, *ranges[j])
+                fut = ahead.pop(i, None)
+                if fut is None:
+                    results.append(self.run_batch(lo, hi))
+                elif whole:
+                    results.append(fut.result())
+                    self.checkpoints.set(self.pipeline, hi, monotone=True)
+                else:
+                    results.append(self.run_batch(lo, hi, stats=fut.result()))
         return results
 
     def _quarantine_recover(self) -> None:

@@ -4,18 +4,21 @@ The reference splits the slot range into 5000-slot chunks, claims them via
 findOneAndUpdate, resumes mid-chunk from lastProcessedSlot, and runs 4
 chunks concurrently (/root/reference/src/etl/transaction-transformer.ts:
 187-265, 267-432). In Spark, *intra-chunk* parallelism is the executors'
-job — a chunk is a delivery_seq range applied as one (or a few) micro-
-batches — so the ledger exists for restartability and lineage, not for
-work distribution. Chunks also bound the state each MERGE touches, which
+job — a chunk is a delivery_seq range applied as one micro-batch — so
+the ledger exists for restartability and lineage, not for work
+distribution. Chunks also bound the state each MERGE touches, which
 keeps per-commit rewrite amplification predictable at 10^10 events.
 
-Resume semantics: a chunk interrupted mid-way restarts from its recorded
-``last_seq`` (batches inside a chunk are themselves idempotent by batch-id,
-so replaying the tail of a chunk is safe — stronger than the reference,
-which can double-apply its last batch).
+Resume semantics: a chunk interrupted mid-way restarts above its recorded
+``last_seq`` (batches are idempotent by batch-id, so replaying a range is
+safe — stronger than the reference, which can double-apply its last
+batch).
 """
 
 from __future__ import annotations
+
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from ..state.stores import ChunkLedger
 from .apply import CdcApplyPipeline
@@ -23,8 +26,7 @@ from .apply import CdcApplyPipeline
 
 class BackfillRunner:
     def __init__(self, pipeline: CdcApplyPipeline, ledger_path: str,
-                 chunk_size: int, intra_chunk_batches: int = 1,
-                 stale_after_s: float | None = 0.0,
+                 chunk_size: int, stale_after_s: float | None = 0.0,
                  bucket_slices: int | None = None):
         """``stale_after_s``: how old a 'running' chunk's heartbeat must be
         before this runner re-claims it (crash recovery). Default 0 = the
@@ -45,7 +47,6 @@ class BackfillRunner:
         self.pipe = pipeline
         self.ledger = ChunkLedger(ledger_path)
         self.chunk_size = chunk_size
-        self.intra_chunk_batches = max(1, intra_chunk_batches)
         self.stale_after_s = stale_after_s
         self.bucket_slices = bucket_slices if (bucket_slices or 0) > 1 else None
 
@@ -59,23 +60,81 @@ class BackfillRunner:
         return self.ledger.plan(lo, hi, self.chunk_size,
                                 n_slices=self.bucket_slices or 1)
 
-    def run(self, max_chunks: int | None = None) -> list[dict]:
-        """Claim and process chunks until none are pending."""
+    def run(self, max_chunks: int | None = None,
+            n_workers: int = 1) -> list[dict]:
+        """Claim and process chunks until none are pending, or until
+        ``max_chunks`` were claimed, with ``n_workers`` chunk processors in
+        flight (reference parity: concurrency=4,
+        /root/reference/src/config/index.ts:25-29).
+
+        Each worker loops claim → apply → complete. Safety comes from the
+        layers below, not from this loop: ledger claims/updates are
+        file-locked atomic (no double-claim, no lost status), table commits
+        go through the optimistic CAS (disjoint-bucket chunk merges union
+        into the snapshot; overlapping ones recompute against the fresh
+        snapshot), and checkpoints are monotone. Spark time-slices the
+        concurrent jobs across executor slots, so extra workers pay off
+        when a single chunk's jobs cannot saturate the cluster (small
+        batches, skewed stages, commit latency). A failed chunk is marked
+        'error' (re-claimable) and its exception propagates, after the
+        other workers drain.
+        """
         self.plan()
-        done = []
-        while max_chunks is None or len(done) < max_chunks:
-            chunk = self.ledger.claim_next(stale_after_s=self.stale_after_s)
+        done: list[dict] = []
+        claimed = 0
+        guard = threading.Lock()
+        # stale_after_s=0.0 is the SINGLE-runner crash-recovery setting
+        # ("any running chunk is a leftover"); with live peers in this
+        # process it would make every just-claimed chunk instantly
+        # re-claimable and all workers pile onto the same chunk. Treat it
+        # as never-steal here; pass a real staleness window to reclaim
+        # chunks from crashed EXTERNAL runners.
+        stale = self.stale_after_s
+        if n_workers > 1 and stale is not None and stale <= 0:
+            stale = None
+
+        def claim(widx: int) -> dict | None:
+            nonlocal claimed
+            with guard:
+                if max_chunks is not None and claimed >= max_chunks:
+                    return None
+                claimed += 1  # reserve a slot BEFORE claiming (no over-claim)
+            chunk = None
+            # slice affinity: worker w drains slice (w mod S) first, so
+            # concurrently-running COW commits touch disjoint buckets and
+            # rebase under the CAS. When its own slice is drained it
+            # steals from any slice — disjointness is a performance
+            # property; correctness is the CAS's regardless.
+            if n_workers > 1 and self.bucket_slices:
+                chunk = self.ledger.claim_next(
+                    stale_after_s=stale, slice_id=widx % self.bucket_slices)
             if chunk is None:
-                break
-            try:
-                res = self._process_chunk(chunk)
-                self.ledger.update(chunk["chunk_id"], status="completed",
-                                   last_seq=chunk["seq_hi"])
-                self._advance_global_hwm()
-                done.append(res)
-            except Exception as e:  # chunk goes back to error -> re-claimable
-                self.ledger.update(chunk["chunk_id"], status="error", error=str(e))
-                raise
+                chunk = self.ledger.claim_next(stale_after_s=stale)
+            if chunk is None:
+                with guard:
+                    claimed -= 1  # release: a None claim must not burn
+            return chunk          # the budget other workers still need
+
+        def worker(widx: int) -> None:
+            while (chunk := claim(widx)) is not None:
+                try:
+                    res = self._process_chunk(chunk)
+                    self.ledger.update(chunk["chunk_id"], status="completed",
+                                       last_seq=chunk["seq_hi"])
+                    self._advance_global_hwm()
+                except Exception as e:  # back to error -> re-claimable
+                    self.ledger.update(chunk["chunk_id"], status="error",
+                                       error=str(e))
+                    raise
+                with guard:
+                    done.append(res)
+
+        # the calling thread is worker 0: one worker starts no thread
+        with ThreadPoolExecutor(max_workers=max(1, n_workers)) as pool:
+            futs = [pool.submit(worker, w) for w in range(1, n_workers)]
+            worker(0)
+            for f in futs:
+                f.result()  # propagate a worker failure
         return done
 
     def _advance_global_hwm(self) -> None:
@@ -103,93 +162,13 @@ class BackfillRunner:
         if hwm is not None:
             self.pipe.checkpoints.set(self.pipe.pipeline, hwm, monotone=True)
 
-    def run_concurrent(self, n_workers: int = 4,
-                       max_chunks: int | None = None) -> list[dict]:
-        """N chunk processors in flight (reference parity: concurrency=4,
-        /root/reference/src/config/index.ts:25-29).
-
-        Each worker loops claim → apply → complete. Safety comes from the
-        layers below, not from this loop: ledger claims/updates are
-        file-locked atomic (no double-claim, no lost status), table commits
-        go through the optimistic CAS (disjoint-bucket chunk merges union
-        into the snapshot; overlapping ones recompute against the fresh
-        snapshot), and checkpoints are monotone. Spark time-slices the
-        concurrent jobs across executor slots, so this pays off when a
-        single chunk's jobs cannot saturate the cluster (small batches,
-        skewed stages, commit latency) — the reference's motivation for 4
-        concurrent chunk processors. Worker exceptions mark the chunk
-        'error' (re-claimable) and propagate after all workers drain.
-        """
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
-
-        self.plan()
-        done: list[dict] = []
-        claimed = 0
-        guard = threading.Lock()
-        # stale_after_s=0.0 is the SINGLE-runner crash-recovery setting
-        # ("any running chunk is a leftover"); with live peers in this
-        # process it would make every just-claimed chunk instantly
-        # re-claimable and all workers pile onto the same chunk. Treat it
-        # as never-steal here; pass a real staleness window to reclaim
-        # chunks from crashed EXTERNAL runners.
-        stale = self.stale_after_s
-        if stale is not None and stale <= 0:
-            stale = None
-
-        def worker(widx: int = 0) -> None:
-            nonlocal claimed
-            # slice affinity: worker w drains slice (w mod S) first, so
-            # concurrently-running COW commits touch disjoint buckets and
-            # rebase under the CAS. When its own slice is drained it
-            # steals from any slice — disjointness is a performance
-            # property; correctness is the CAS's regardless.
-            own_slice = (widx % self.bucket_slices
-                         if self.bucket_slices else None)
-            while True:
-                with guard:
-                    if max_chunks is not None and claimed >= max_chunks:
-                        return
-                    claimed += 1  # reserve a slot BEFORE claiming (no over-claim)
-                chunk = None
-                if own_slice is not None:
-                    chunk = self.ledger.claim_next(stale_after_s=stale,
-                                                   slice_id=own_slice)
-                if chunk is None:
-                    chunk = self.ledger.claim_next(stale_after_s=stale)
-                if chunk is None:
-                    with guard:
-                        claimed -= 1  # release: a None claim must not burn
-                    return            # the budget other workers still need
-                try:
-                    res = self._process_chunk(chunk)
-                    self.ledger.update(chunk["chunk_id"], status="completed",
-                                       last_seq=chunk["seq_hi"])
-                    self._advance_global_hwm()
-                    with guard:
-                        done.append(res)
-                except Exception as e:
-                    self.ledger.update(chunk["chunk_id"], status="error",
-                                       error=str(e))
-                    raise
-
-        with ThreadPoolExecutor(max_workers=max(1, n_workers)) as pool:
-            futs = [pool.submit(worker, w) for w in range(max(1, n_workers))]
-            for f in futs:
-                f.result()  # propagate the first worker failure
-        return done
-
     def _process_chunk(self, chunk: dict) -> dict:
-        import threading
-
-        # resume mid-chunk: start above whatever this chunk already applied
+        """Apply a chunk as ONE batch, from above whatever it already
+        applied to its seq_hi."""
         start = max(chunk["seq_lo"] - 1, chunk["last_seq"])
         hi = chunk["seq_hi"]
-        span = max(1, (hi - start) // self.intra_chunk_batches + 1)
-        results = []
-        cur = start
-        # heartbeat: the per-batch last_seq update is the only mtime bump,
-        # and a chunk is often ONE long batch — a peer using a staleness
+        # heartbeat: the chunk's one batch can run long, and the ledger's
+        # only other mtime bump is its end — a peer using a staleness
         # window would steal a live-but-slow chunk. Tick updated_at every
         # 30 s while the chunk runs so only true crashes look stale.
         stop = threading.Event()
@@ -206,14 +185,12 @@ class BackfillRunner:
         bucket_slice = None
         if chunk.get("n_slices", 1) > 1:
             bucket_slice = (chunk["slice_id"], chunk["n_slices"])
+        results = []
         try:
-            while cur < hi:
-                nxt = min(cur + span, hi)
-                results.append(self.pipe.run_batch(cur, nxt,
+            if start < hi:  # the caller records last_seq=hi with 'completed'
+                results.append(self.pipe.run_batch(start, hi,
                                                    update_global_hwm=False,
                                                    bucket_slice=bucket_slice))
-                self.ledger.update(chunk["chunk_id"], last_seq=nxt)
-                cur = nxt
         finally:
             stop.set()
             ticker.join(timeout=5.0)

@@ -7,7 +7,7 @@ apply jobs:
 - AQE on (runtime coalescing + skew-join splitting),
 - shuffle partitions ~ cores locally (the engine overrides per-table with
   its bucket count at scale),
-- Arrow on for the vectorized pandas-UDF decode path,
+- Arrow on for mapInPandas / pandas UDFs and toPandas,
 - UTC session timezone (oracle comparison: DuckDB timestamps are UTC-naive).
 
 Reference analog: the reference hard-codes its parallelism knobs
@@ -76,9 +76,3 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -1514,24 +1514,18 @@ class MergeTable:
                     and cur.get("n_buckets") == target.get("n_buckets")):
                 return cur  # already at the target state
             batch_id = batch_id or f"rollback:v{version}@{cur['version']}"
-            window = cur.get("batch_window", 256)
             new_snap = {
                 **target,
+                # the commit bookkeeping (version, lineage, monotone
+                # committed_at) continues CURRENT's, so TIMESTAMP AS OF
+                # before the rollback still sees the undone state; the
+                # applied manifest is the target's plus this id
+                **self._commit_fields(
+                    {**cur, "applied_batch_ids": target["applied_batch_ids"]},
+                    batch_id),
                 # schemas map is append-only: keep the superset so any
                 # later roll-FORWARD re-validates against known ids
                 "schemas": {**target["schemas"], **cur["schemas"]},
-                "version": cur["version"] + 1,
-                "parent": cur["version"],
-                "batch_id": batch_id,
-                "applied_batch_ids":
-                    (target["applied_batch_ids"] + [batch_id])[-window:],
-                "n_batches_total": cur.get("n_batches_total", 0) + 1,
-                # the rollback COMMIT's wall-clock, not the target's
-                # (spread from **target above): TIMESTAMP AS OF before
-                # the rollback still sees the undone state. Monotone
-                # clamp, same as _commit_fields.
-                "committed_at": max(time.time(),
-                                    cur.get("committed_at") or 0.0),
             }
             self._write_snapshot(new_snap)
         self._append_lineage({

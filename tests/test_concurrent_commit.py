@@ -163,7 +163,7 @@ def test_concurrent_backfill_converges_to_oracle(spark, tmpdir_path):
     chunk_size = max(1, (hi - lo) // 7)  # ~8 chunks across 4 workers
     bf = BackfillRunner(pipe, f"{tmpdir_path}/state/chunks.json", chunk_size,
                         stale_after_s=None)  # live peers: never steal
-    done = bf.run_concurrent(n_workers=4)
+    done = bf.run(n_workers=4)
     chunks = bf.ledger.chunks()
     assert all(c["status"] == "completed" for c in chunks)
     assert len(done) == len(chunks)  # each chunk processed exactly once
@@ -179,7 +179,7 @@ def test_concurrent_backfill_converges_to_oracle(spark, tmpdir_path):
     exp = exp[got.columns.tolist()].reset_index(drop=True)
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
     # re-run: fully backfilled ledger is a no-op
-    assert bf.run_concurrent(n_workers=4) == []
+    assert bf.run(n_workers=4) == []
 
 
 def test_cross_process_writers_both_land(spark, tmpdir_path):
@@ -297,7 +297,7 @@ def test_bucket_sliced_backfill_converges_and_commits_disjoint(
     chunk_size = max(1, (hi - lo) // 3)  # ~4 ranges x 4 slices = 16 units
     bf = BackfillRunner(pipe, f"{tmpdir_path}/state/chunks.json", chunk_size,
                         stale_after_s=None, bucket_slices=4)
-    done = bf.run_concurrent(n_workers=4)
+    done = bf.run(n_workers=4)
     chunks = bf.ledger.chunks()
     assert all(c["status"] == "completed" for c in chunks)
     assert len(done) == len(chunks)
@@ -320,7 +320,7 @@ def test_bucket_sliced_backfill_converges_and_commits_disjoint(
     exp = exp[got.columns.tolist()].reset_index(drop=True)
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
     # idempotent: drained sliced ledger is a no-op
-    assert bf.run_concurrent(n_workers=4) == []
+    assert bf.run(n_workers=4) == []
 
 
 def test_sliced_hwm_waits_for_all_slices(tmpdir_path):

@@ -9,7 +9,9 @@ The literals below were computed by an independent Python implementation
 
 from pyspark.sql import functions as F
 
-from ore_etl_spark.operators.decode import decode_events, decode_events_pandas
+from ore_etl_spark.operators.decode import decode_events
+
+from tests.oracles import decode_events_pandas
 
 GOLDEN_VALID = [
     # (name, payload, version, content_len, sha256)

@@ -3,7 +3,9 @@
 from pyspark.sql import functions as F
 
 from ore_etl_spark.operators.asof import asof_join_range, asof_join_union
-from ore_etl_spark.operators.lww import dedupe_lww, dedupe_lww_window
+from ore_etl_spark.operators.lww import dedupe_lww
+
+from tests.oracles import dedupe_lww_window
 
 
 def test_lww_agg_matches_window(spark):

@@ -1,5 +1,7 @@
 """Backfill chunk ledger, continuous tail, streaming, multimodal plumbing."""
 
+import threading
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -194,14 +196,56 @@ def test_streaming_restart_processes_only_new_files(spark, tmpdir_path, wal):
     assert m.skipped_already_committed and tbl.version == before
 
 
-def test_pipelined_run_matches_sequential(spark, tmpdir_path, wal):
-    """r6: run(pipelined=True) (the >=16-slot default) prefetches batch
-    N+1's stats pass while batch N merges — final table state and
-    per-batch metrics must match the sequential path exactly."""
+def sixteen_slots(monkeypatch):
+    """Make every SparkContext report 16 scheduler slots: ``run()``'s
+    width-2 threshold. Only the reported count changes — the session
+    keeps its executor threads."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda self: 16))
+
+
+def record_batches(pipe, monkeypatch, together: int = 0):
+    """Wrap ``pipe.run_batch``: log each call's thread and whether it got
+    prefetched stats, and the peak number of calls in flight at once.
+    The first ``together`` calls wait until all of them are in flight, so
+    a run that never overlaps them fails instead of passing by timing."""
+    real, lock = pipe.run_batch, threading.Lock()
+    gate = threading.Barrier(together, timeout=120) if together else None
+    log = {"calls": [], "live": 0, "peak": 0}
+
+    def counted(lo, hi, **kw):
+        with lock:
+            n = len(log["calls"])
+            log["calls"].append((threading.get_ident(),
+                                 kw.get("stats") is not None))
+            log["live"] += 1
+            log["peak"] = max(log["peak"], log["live"])
+        try:
+            if n < together:
+                gate.wait()
+            return real(lo, hi, **kw)
+        finally:
+            with lock:
+                log["live"] -= 1
+
+    monkeypatch.setattr(pipe, "run_batch", counted)
+    return log
+
+
+def test_pipelined_run_matches_sequential(spark, tmpdir_path, wal,
+                                          monkeypatch):
+    """At 16 slots COW ``run()`` prefetches batch N+1's stats pass while
+    batch N merges — final table state and per-batch metrics must match
+    the sequential path exactly."""
     seq = build(spark, f"{tmpdir_path}/a", wal)
     lo, hi = seq.delivery_range()
     span = max(1, (hi - lo) // 4 + 1)
-    r_seq = seq.run(batch_span=span, pipelined=False)
+    seq_log = record_batches(seq, monkeypatch)
+    r_seq = seq.run(batch_span=span)
+    # below 16 slots: every batch on the calling thread, none prefetched
+    assert seq_log["calls"] == [(threading.get_ident(), False)] * len(r_seq)
     pipe = CdcApplyPipeline(
         spark, wal,
         MergeTable.create(
@@ -209,21 +253,27 @@ def test_pipelined_run_matches_sequential(spark, tmpdir_path, wal):
             key_cols=["repo", "path"],
             version_cols=["commit_seq", "event_seq"], n_buckets=8),
         f"{tmpdir_path}/b/state")
-    r_pip = pipe.run(batch_span=span, pipelined=True)
+    sixteen_slots(monkeypatch)
+    pip_log = record_batches(pipe, monkeypatch)
+    r_pip = pipe.run(batch_span=span)
+    # every batch after the first took the stats pass run ahead for it
+    assert [got for _, got in pip_log["calls"]] == \
+        [False] + [True] * (len(r_pip) - 1)
+    assert len(r_pip) > 1
     assert [r["batch_id"] for r in r_pip] == [r["batch_id"] for r in r_seq]
     assert [r["n_in"] for r in r_pip] == [r["n_in"] for r in r_seq]
     assert ([r["n_quarantined"] for r in r_pip]
             == [r["n_quarantined"] for r in r_seq])
+    assert pipe.checkpoints.get(pipe.pipeline) == hi
     parity(spark, pipe.table, wal)
 
 
-def test_concurrent_mor_batches_match_sequential(spark, tmpdir_path, wal):
-    """r6: MOR runs two delta-append batches in flight (the
-    >=16-slot default; forced here by patching the slot check is not
-    needed — exercise the worker path directly via run_batch +
-    update_global_hwm=False then compare to a sequential run)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+def test_concurrent_mor_batches_match_sequential(spark, tmpdir_path, wal,
+                                                 monkeypatch):
+    """At 16 slots a MOR ``run()`` with no compaction cadence keeps two
+    delta-append batches in flight; it must converge to the same state
+    and per-batch records as a sequential run, with the global hwm at the
+    head."""
     def make(sub):
         tbl = MergeTable.create(
             spark, f"{tmpdir_path}/{sub}/target", target_schema(),
@@ -235,22 +285,21 @@ def test_concurrent_mor_batches_match_sequential(spark, tmpdir_path, wal):
     seq = make("seq")
     lo, hi = seq.delivery_range()
     span = max(1, (hi - lo) // 4 + 1)
-    seq.run(batch_span=span)  # local[8] in tests -> sequential branch
+    seq_log = record_batches(seq, monkeypatch)
+    r_seq = seq.run(batch_span=span)  # local[8] in tests: width 1
+    assert seq_log["calls"] == [(threading.get_ident(), False)] * len(r_seq)
     seq.table.compact("final-seq")
 
     con = make("con")
-    ranges = []
-    cur = lo - 1
-    while cur < hi:
-        h2 = min(cur + span, hi)
-        ranges.append((cur, h2))
-        cur = h2
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(con.run_batch, a, b, update_global_hwm=False)
-                for a, b in ranges]
-        for (a, b), f in zip(ranges, futs):
-            f.result()
-            con.checkpoints.set(con.pipeline, b, monotone=True)
+    sixteen_slots(monkeypatch)
+    con_log = record_batches(con, monkeypatch, together=2)
+    r_con = con.run(batch_span=span)
+    assert len(r_con) > 2
+    assert con_log["peak"] == 2  # two batches in flight, never more
+    assert [r["batch_id"] for r in r_con] == [r["batch_id"] for r in r_seq]
+    assert [r["n_in"] for r in r_con] == [r["n_in"] for r in r_seq]
+    assert ([r["n_quarantined"] for r in r_con]
+            == [r["n_quarantined"] for r in r_seq])
     con.table.compact("final-con")
     assert con.checkpoints.get(con.pipeline) == hi
     parity(spark, con.table, wal)

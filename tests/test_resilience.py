@@ -210,7 +210,9 @@ def test_redrive_recovers_transient_and_deadletters_permanent(spark, tmpdir_path
 # ---------------------------------------------------------------------------
 
 def test_decode_paths_agree_on_invalid_utf8(spark):
-    from ore_etl_spark.operators.decode import decode_events, decode_events_pandas
+    from ore_etl_spark.operators.decode import decode_events
+
+    from tests.oracles import decode_events_pandas
 
     bad_utf8 = struct.pack("<II", 1, 2) + b"\xff\xfe"          # len OK, bytes bad
     overlong = struct.pack("<II", 1, 2) + b"\xc0\xaf"          # overlong '/'

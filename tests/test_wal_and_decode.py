@@ -3,12 +3,9 @@
 from pyspark.sql import functions as F
 
 from ore_etl_spark.datagen.wal import decode_payload_py, generate_wal
-from ore_etl_spark.operators.decode import (
-    b58decode_py,
-    b58encode_py,
-    decode_events,
-    decode_events_pandas,
-)
+from ore_etl_spark.operators.decode import decode_events
+
+from tests.oracles import b58decode_py, b58encode_py, decode_events_pandas
 
 
 def test_wal_is_deterministic_across_parallelism(spark):
@@ -96,7 +93,7 @@ def test_base58_roundtrip(spark):
     # vectorized UDF agrees with python fn
     df = spark.createDataFrame([("3yZe7d",), ("11abc",)], "s string")
     got = df.select(F.col("s")).collect()
-    from ore_etl_spark.operators.decode import b58decode_udf
+    from tests.oracles import b58decode_udf
 
     out = df.withColumn("b", b58decode_udf()("s")).collect()
     for r_in, r_out in zip(got, out):
