@@ -8,6 +8,8 @@ One batch = one delivery_seq range above the checkpoint:
       -> LWW MERGE (touched buckets ∪ batch)    -- one bucket shuffle
       -> atomic snapshot commit w/ batch-id     -- exactly-once
       -> checkpoint hwm (global + per source partition) + metrics row
+    (MOR: a due compaction of the pre-append snapshot runs beside all of
+    this on a worker thread and is joined last)
 
 Reference shape: DeployETL.run's fetch->process->save->updateETLState loop
 (/root/reference/src/etl/deploy-etl.ts:19-100), with its two weaknesses
@@ -34,6 +36,7 @@ from __future__ import annotations
 import os
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,10 +109,14 @@ class CdcApplyPipeline:
         or 'mor' (merge-on-read delta append — write-optimized; bytes
         written per batch are O(batch) not O(table); readers resolve LWW).
         ``compact_every``: in MOR mode, fold deltas into the base every N
-        batches (amortized read cost). ``compact_depth``: compact when any
-        bucket's unresolved delta-ref count exceeds this — bounds read
+        batches (amortized read cost). ``compact_depth``: keep every
+        bucket's unresolved delta-ref count at or below this — bounds read
         amplification by what readers actually pay rather than a blind
-        batch counter (a metadata-only check per batch, no Spark job)."""
+        batch counter. Both are checked when a MOR batch starts (a
+        metadata-only check, no Spark job): a batch that would push a
+        bucket past ``compact_depth`` (the depth already equals it) folds
+        the snapshot it starts from, on a worker thread beside its own
+        append, and joins the fold before it returns (``run_batch``)."""
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown mode {mode!r}")
         if events_format not in ("parquet", "jsonl", "kafka"):
@@ -396,10 +403,21 @@ class CdcApplyPipeline:
         then the write — for MOR an append whose one exchange lays the
         batch out by bucket (one delta file per touched bucket, every core
         writing), the bucket exchange and the resolve-and-write for COW —
-        plus the quarantine write when the batch has invalid rows, and a
-        compaction when the MOR cadence trips. For a parquet WAL the scan
-        is planned from footer bounds (only files meeting the range are
-        read), so no listing or schema-inference job precedes it.
+        plus the quarantine write when the batch has invalid rows. For a
+        parquet WAL the scan is planned from footer bounds (only files
+        meeting the range are read), so no listing or schema-inference job
+        precedes it.
+
+        MOR compaction: the cadence is checked before anything else (see
+        ``CdcApplyPipeline``). When it trips, ``compact`` starts on the
+        pre-append snapshot on a worker thread, and the batch runs its
+        stats pass, append, commit, checkpoints in parallel with it; the
+        fold's ref-level commit rebases over the append, whichever lands
+        first. The fold is joined last, so no compaction outlives its
+        batch, and a failed one raises only after the batch is committed,
+        checkpointed and recorded. The ``MetricsLog`` record's
+        ``compaction`` is ``{version, wall_ms, n_buckets_touched}`` for
+        the fold, or None when none ran or it failed.
         Deliberately NO ``.persist()`` of the decoded frame: local-mode
         cache materialization serializes on the block manager (measured
         53 s at 32 threads vs 26 s at 8 on a 505k-event batch —
@@ -423,93 +441,104 @@ class CdcApplyPipeline:
         if self.table.is_committed(batch_id):
             return {"batch_id": batch_id, "skipped_already_committed": True}
 
-        if stats is not None:
-            decoded, part_stats = stats
-        else:
-            decoded, part_stats = self._stats_phase(seq_lo, seq_hi,
-                                                    bucket_slice=bucket_slice)
-        qn = sum(r["n_bad"] or 0 for r in part_stats)
-        touched = sorted({b for r in part_stats for b in r["buckets"]})
-        extra = [
-            c for c in self.optional_cols
-            if c in decoded.columns and any(r[f"has_{c}"] for r in part_stats)
-        ]
+        # side work runs on up to two worker threads, started on the first
+        # submit and all joined before this call returns (``with``)
+        with ThreadPoolExecutor(max_workers=2) as side:
+            # --- MOR compaction, beside the batch rather than after it ---
+            # it folds the pre-append snapshot; its ref-level commit
+            # rebases over this batch's append (``MergeTable.compact``),
+            # and it is joined only once the batch is committed and
+            # checkpointed
+            fold = None
+            if self.mode == "mor" and self._compaction_due():
+                fold = side.submit(self._compact, f"compact:{batch_id}")
+                self._batches_since_compact = 0
 
-        # --- quarantine (only when present; idempotent per-batch dir) ------
-        # the FULL raw row is kept (not a projection) so redrive() can
-        # re-decode after an upstream repair; attempts counts decode tries
-        # (reference x-retry-count, transaction-consumer.ts:145-174).
-        # r6 (guide §2.6 overlap): the write runs on a worker thread
-        # CONCURRENTLY with the merge's own jobs and is joined at the
-        # merge's pre-commit barrier: the quarantine must be durable
-        # BEFORE the snapshot flips, because a replay of a committed
-        # batch_id skips the batch entirely and would never re-park them.
-        # Every exit from the merge also awaits it (``finally`` below), so
-        # a merge that skips the barrier (its batch already committed)
-        # still surfaces a failed write and leaves no thread behind.
-        qpool = quarantine_fut = pre_commit = None
-        if qn > 0:
-            # heal any interrupted redrive swap BEFORE writing: creating
-            # the dir here would otherwise strand a complete .next
-            # generation forever (quarantine() would never promote it)
-            self._quarantine_recover()
-            raw_cols = tuple(c for c in decoded.columns if c not in DECODE_ADDED)
-            keep, cols = self._expr(("quarantine", raw_cols), lambda: (
-                ~F.col("is_valid"),
-                [*map(F.col, raw_cols),
-                 F.lit("payload_decode_failed").alias("error"),
-                 F.lit(1).alias("attempts")]))
-            bad = decoded.filter(keep).select(*cols)
-            qdir = f"{self.quarantine_dir}/batch_id={batch_id.replace(':', '_')}"
-            from concurrent.futures import ThreadPoolExecutor
+            if stats is not None:
+                decoded, part_stats = stats
+            else:
+                decoded, part_stats = self._stats_phase(
+                    seq_lo, seq_hi, bucket_slice=bucket_slice)
+            qn = sum(r["n_bad"] or 0 for r in part_stats)
+            touched = sorted({b for r in part_stats for b in r["buckets"]})
+            extra = [
+                c for c in self.optional_cols
+                if c in decoded.columns and any(r[f"has_{c}"] for r in part_stats)
+            ]
 
-            qpool = ThreadPoolExecutor(max_workers=1)
-            quarantine_fut = qpool.submit(
-                lambda: bad.write.mode("overwrite").parquet(qdir))
-            pre_commit = quarantine_fut.result
+            # --- quarantine (only when present; idempotent per-batch dir) --
+            # the FULL raw row is kept (not a projection) so redrive() can
+            # re-decode after an upstream repair; attempts counts decode
+            # tries (reference x-retry-count, transaction-consumer.ts:145-174).
+            # r6 (guide §2.6 overlap): the write runs on a worker thread
+            # CONCURRENTLY with the merge's own jobs and is joined at the
+            # merge's pre-commit barrier: the quarantine must be durable
+            # BEFORE the snapshot flips, because a replay of a committed
+            # batch_id skips the batch entirely and would never re-park
+            # them. A merge that skips the barrier (its batch already
+            # committed) still surfaces a failed write below.
+            quarantine_fut = pre_commit = None
+            if qn > 0:
+                # heal any interrupted redrive swap BEFORE writing: creating
+                # the dir here would otherwise strand a complete .next
+                # generation forever (quarantine() would never promote it)
+                self._quarantine_recover()
+                raw_cols = tuple(c for c in decoded.columns
+                                 if c not in DECODE_ADDED)
+                keep, cols = self._expr(("quarantine", raw_cols), lambda: (
+                    ~F.col("is_valid"),
+                    [*map(F.col, raw_cols),
+                     F.lit("payload_decode_failed").alias("error"),
+                     F.lit(1).alias("attempts")]))
+                bad = decoded.filter(keep).select(*cols)
+                qdir = (f"{self.quarantine_dir}/"
+                        f"batch_id={batch_id.replace(':', '_')}")
+                quarantine_fut = side.submit(
+                    lambda: bad.write.mode("overwrite").parquet(qdir))
+                pre_commit = quarantine_fut.result
 
-        # --- the write: MOR bucket-exchanged append / COW LWW MERGE ------
-        # the arrival breaks version ties in the table's LWW order
-        keep, cols = self._expr(("valid", tuple(extra)), lambda: (
-            F.col("is_valid"),
-            [*[F.col(c) for c in [n for n, _ in TARGET_FIELDS] + ["op", *extra]],
-             F.col("delivery_seq").alias(ARRIVAL_COL)]))
-        valid = decoded.filter(keep).select(*cols)
-        try:
+            # --- the write: MOR bucket-exchanged append / COW LWW MERGE ----
+            # the arrival breaks version ties in the table's LWW order
+            keep, cols = self._expr(("valid", tuple(extra)), lambda: (
+                F.col("is_valid"),
+                [*[F.col(c) for c in [n for n, _ in TARGET_FIELDS] + ["op", *extra]],
+                 F.col("delivery_seq").alias(ARRIVAL_COL)]))
+            valid = decoded.filter(keep).select(*cols)
             if self.mode == "mor":
                 m = self.table.merge_mor(valid, batch_id, pre_commit=pre_commit)
                 self._batches_since_compact += 1
-                due = (self.compact_every
-                       and self._batches_since_compact >= self.compact_every)
-                deep = (self.compact_depth
-                        and self.table.delta_depth() > self.compact_depth)
-                if due or deep:
-                    self.table.compact(f"compact:{batch_id}")
-                    self._batches_since_compact = 0
             else:
                 m = self.table.merge(valid, batch_id, touched_buckets=touched,
                                      pre_commit=pre_commit)
-        finally:
-            if qpool is not None:
-                qpool.shutdown(wait=True)
-        if quarantine_fut is not None:
-            quarantine_fut.result()  # raises a failed write the merge skipped
+            if quarantine_fut is not None:
+                quarantine_fut.result()  # raises a failed write the merge skipped
 
-        # checkpoint AFTER commit: replay of (lo,hi] is a snapshot-level
-        # no-op. Monotone: concurrent chunk processors finish out of order
-        # and must never drag a watermark hint backwards.
-        if part_stats:
-            self.checkpoints.set_many(
-                self.pipeline, {r["partition_id"]: r["hwm"] for r in part_stats},
-                monotone=True,
-            )
-        # The GLOBAL hwm means "everything <= hwm is applied" — run()
-        # resumes above it. Out-of-order chunk completion breaks that
-        # contiguity, so the concurrent backfill passes False here and
-        # advances the global hwm itself to the contiguous-completed
-        # prefix of its ledger (never past a gap).
-        if update_global_hwm:
-            self.checkpoints.set(self.pipeline, seq_hi, monotone=True)
+            # checkpoint AFTER commit: replay of (lo,hi] is a snapshot-level
+            # no-op. Monotone: concurrent chunk processors finish out of
+            # order and must never drag a watermark hint backwards.
+            if part_stats:
+                self.checkpoints.set_many(
+                    self.pipeline,
+                    {r["partition_id"]: r["hwm"] for r in part_stats},
+                    monotone=True,
+                )
+            # The GLOBAL hwm means "everything <= hwm is applied" — run()
+            # resumes above it. Out-of-order chunk completion breaks that
+            # contiguity, so the concurrent backfill passes False here and
+            # advances the global hwm itself to the contiguous-completed
+            # prefix of its ledger (never past a gap).
+            if update_global_hwm:
+                self.checkpoints.set(self.pipeline, seq_hi, monotone=True)
+
+            # the batch is committed and checkpointed: only now join the
+            # fold, so a failed compaction surfaces without leaving the
+            # batch behind its checkpoint
+            fold_err = compaction = None
+            if fold is not None:
+                try:
+                    compaction = fold.result()
+                except Exception as e:  # raised after the record is written
+                    fold_err = e
 
         wall = time.time() - t0
         n_in = sum(r["n_in"] for r in part_stats) if part_stats else None
@@ -532,9 +561,32 @@ class CdcApplyPipeline:
                  "n_quarantined": r["n_bad"], "hwm": r["hwm"]}
                 for r in part_stats
             ],
+            # the fold this batch ran beside it, or None
+            "compaction": compaction,
         }
         self.metrics.append(rec)
+        if fold_err is not None:
+            raise fold_err
         return rec
+
+    def _compaction_due(self) -> bool:
+        """The MOR cadence, checked before the batch appends: due every
+        ``compact_every`` batches, or when the append would leave a bucket
+        deeper than ``compact_depth`` (the current depth already reaches
+        it). A metadata-only check, no Spark job."""
+        return bool(
+            (self.compact_every
+             and self._batches_since_compact >= self.compact_every)
+            or (self.compact_depth
+                and self.table.delta_depth() >= self.compact_depth))
+
+    def _compact(self, batch_id: str) -> dict:
+        """One ``compact`` call, as the batch record's ``compaction``."""
+        t0 = time.perf_counter()
+        m = self.table.compact(batch_id)
+        return {"version": m.version,
+                "wall_ms": round((time.perf_counter() - t0) * 1000, 1),
+                "n_buckets_touched": m.n_buckets_touched}
 
     # ------------------------------------------------------------------
     def run(self, batch_span: int | None = None,
@@ -564,8 +616,6 @@ class CdcApplyPipeline:
           takes; commits stay strictly ordered. Reference parity: the
           transformer's fetch-ahead (transaction-transformer.ts:319,341).
         """
-        from concurrent.futures import ThreadPoolExecutor
-
         self.quarantine_malformed_source()
         lo_all, hi_all = self.delivery_range()
         if hi_all is None:  # empty WAL — nothing to apply

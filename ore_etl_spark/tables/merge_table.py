@@ -55,17 +55,23 @@ parity; the reference runs 4 concurrent chunk processors,
 is computed against a parent snapshot and published through a CAS on the
 ``CURRENT`` pointer (``_cas_commit``): under a short file lock the pointer
 is re-read, and if another writer advanced it the commit REBASES — delta
-(MOR) appends always union in; COW bucket replacements union in iff no
-intervening commit touched the same buckets (proved by manifest diff);
-anything else raises ``CommitConflict`` and the caller recomputes against
-the fresh snapshot (bounded retries). Writers never hold the lock during
-Spark jobs — only for the O(manifest) pointer swap.
+(MOR) appends always union in; a tombstone-retaining ``compact`` swaps
+exactly the refs it read and unions in iff all of them are still current
+(ref-level: it rebases over any concurrent append); COW bucket
+replacements union in iff no intervening commit touched the same buckets
+(proved by manifest diff); anything else raises ``CommitConflict`` and the
+caller recomputes against the fresh snapshot (bounded retries). Writers
+never hold the lock during Spark jobs — only for the O(manifest) pointer
+swap.
 
-Two maintenance calls still assume a quiet table: ``vacuum`` (it would
-delete a concurrent in-flight writer's not-yet-committed files as
-"aborted") and ``compact(retain_tombstones=False)`` (GC compaction's
-out-of-order-horizon precondition is violated by definition while writers
-are live). Run those from the maintenance window.
+So a MOR tail can compact while it appends (``CdcApplyPipeline`` runs the
+fold beside the batch that trips it). Two maintenance calls still assume a
+quiet table: ``vacuum`` (it would delete a concurrent in-flight writer's
+not-yet-committed files as "aborted") and
+``compact(retain_tombstones=False)`` (GC compaction's out-of-order-horizon
+precondition is violated by definition while writers are live, and it
+keeps the bucket-level rebase rule). Run those from the maintenance
+window.
 """
 
 from __future__ import annotations
@@ -361,7 +367,12 @@ class MergeTable:
     def _read_refs(self, snap: dict, refs: list[dict]) -> DataFrame:
         """``refs``' stored rows, hidden columns included, aligned to the
         snapshot's stored schema (files written before ``_arrival`` existed
-        read it as NULL)."""
+        read it as NULL).
+
+        Spark lists more than ``parallelPartitionDiscovery.threshold`` root
+        paths in a Spark job with one task per path, so the refs are read
+        in chunks of at most that many paths, each listed on the driver,
+        and the chunks are unioned: building the read starts no job."""
         full = self._stored_schema(snap)
         if not refs:
             return self.spark.createDataFrame([], full)
@@ -370,14 +381,18 @@ class MergeTable:
             by_schema.setdefault(r["schema_id"], []).append(
                 os.path.join(self.root, r["path"])
             )
+        limit = max(1, int(self.spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "32")))
         parts = []
         for sid, paths in by_schema.items():
             stored = T.StructType.fromJson(json.loads(snap["schemas"][sid]))
-            stored = T.StructType(stored.fields + list(_HIDDEN))
-            parts.append(self._align(self.spark.read.schema(stored).parquet(*paths), full))
+            reader = self.spark.read.schema(
+                T.StructType(stored.fields + list(_HIDDEN)))
+            parts += [self._align(reader.parquet(*paths[i:i + limit]), full)
+                      for i in range(0, len(paths), limit)]
         df = parts[0]
         for p in parts[1:]:
-            df = df.unionByName(p)
+            df = df.union(p)  # aligned: same columns, same order
         return df
 
     def _resolved(self, snap: dict, refs: list[dict]) -> DataFrame:
@@ -732,16 +747,38 @@ class MergeTable:
             lambda: (F.col(_OP_COL) == F.lit(_DELETE_OP)) if has_op
             else F.lit(False)))
 
-    def _sorted_by_bucket(self, snap: dict, df: DataFrame, width: int) -> DataFrame:
-        """Full-rewrite layout: one task per bucket (up to 256), rows
-        sorted by ``stats_cols`` within each bucket (Iceberg sort-order
-        parity: sorted data gives parquet row-group pruning real bite)."""
-        out = df.withColumn(_BUCKET_COL, self.bucket_expr(snap)).repartition(
-            min(max(width, 1), 256), F.col(_BUCKET_COL))
+    def _bucket_layout(self, df: DataFrame, n_tasks: int) -> DataFrame:
+        """``df`` (carrying ``_BUCKET_COL``) laid out by bucket: bucket b
+        goes to write task ``b mod k``, ``k = min(n_tasks,
+        defaultParallelism)``. Ids 0..n-1 spread evenly (hashing them
+        lands 6/4/3/3 on 4 tasks), with no sampling job, and a later
+        grouping that includes ``_BUCKET_COL`` reuses the exchange. The
+        explicit task count also keeps AQE from coalescing it."""
+        k = min(max(n_tasks, 1), self.spark.sparkContext.defaultParallelism)
+        return df.repartitionById(
+            k, self._expr("bucket_col", lambda: F.col(_BUCKET_COL)))
+
+    def _rewrite(self, snap: dict, refs: list[dict], out_snap: dict,
+                 n_buckets: int, drop_tombstones: bool = False) -> DataFrame:
+        """The resolve-and-rewrite step ``compact`` and ``rebucket`` share:
+        ``refs``' rows under ``out_snap``'s bucket spec, laid out over
+        ``n_buckets`` write buckets (``_bucket_layout``), resolved per
+        (bucket, key) in that layout — only when a delta ref can hold a key
+        twice — and sorted within each bucket by ``stats_cols`` (Iceberg
+        sort-order parity: sorted data gives parquet row-group pruning real
+        bite). One Exchange in all; the resolution reuses it. Tombstones
+        are dropped after the resolution, never before (filtering first
+        would resurrect deleted keys)."""
+        df = self._bucket_layout(
+            self._read_refs(snap, refs).withColumn(
+                _BUCKET_COL, self.bucket_expr(out_snap)), n_buckets)
+        if any(r.get("delta") for r in refs):
+            df = dedupe_lww(df, [_BUCKET_COL, *snap["key_cols"]],
+                            snap["version_cols"])
+        if drop_tombstones:
+            df = df.filter(~F.col(_DELETED_COL))
         sort_cols = [c for c in (snap.get("stats_cols") or []) if c in df.columns]
-        if sort_cols:
-            out = out.sortWithinPartitions(_BUCKET_COL, *sort_cols)
-        return out
+        return df.sortWithinPartitions(_BUCKET_COL, *sort_cols)
 
     # ----------------------------------------------------------- MOR write
     def merge_mor(
@@ -766,17 +803,17 @@ class MergeTable:
         (attempt files are dead weight, GC'able).
 
         The write path is source -> bucketed APPEND of rows + tombstones.
-        The batch is hash-exchanged on its bucket id into
-        ``min(n_buckets, defaultParallelism)`` write tasks, so every bucket
-        lands in exactly one task: the append writes ONE delta file per
-        touched bucket, with every core writing. In-batch duplicates are
-        written as they are. No target-side scan, no join, no rewrite of
-        carried rows — bytes written (and shuffled) per batch are
-        O(batch), not O(table). Without the exchange a hash-spread batch
-        puts every bucket in every scan task, so files per batch would be
-        ``tasks × n_buckets``; coalescing to one task instead writes them
-        serially on one core. The explicit partition count also keeps AQE
-        from collapsing the exchange to fewer tasks.
+        The batch is exchanged on its bucket id into
+        ``min(n_buckets, defaultParallelism)`` write tasks, bucket b in
+        task b mod k (``_bucket_layout``), so every bucket lands in exactly
+        one task and the tasks get even bucket counts: the append writes
+        ONE delta file per touched bucket, with every core writing.
+        In-batch duplicates are written as they are. No target-side scan,
+        no join, no rewrite of carried rows — bytes written (and shuffled)
+        per batch are O(batch), not O(table). Without the exchange a
+        hash-spread batch puts every bucket in every scan task, so files
+        per batch would be ``tasks × n_buckets``; coalescing to one task
+        instead writes them serially on one core.
 
         This is the write-optimized half of the Hudi/Paimon MOR trade:
         readers resolve LWW across base + deltas (``read`` does a global
@@ -798,9 +835,9 @@ class MergeTable:
         def attempt(snap: dict) -> MergeMetrics:
             snap = self._evolved(snap, source)
             src = self._align(self._tombstoned(source), self._stored_schema(snap))
-            src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap)).repartition(
-                min(snap["n_buckets"], self.spark.sparkContext.defaultParallelism),
-                self._expr("bucket_col", lambda: F.col(_BUCKET_COL)))
+            src = self._bucket_layout(
+                src.withColumn(_BUCKET_COL, self.bucket_expr(snap)),
+                snap["n_buckets"])
             return self._write_and_commit(snap, batch_id, src, None,
                                           pre_commit=pre_commit)
 
@@ -819,7 +856,9 @@ class MergeTable:
         when ``retain_tombstones=False``, any refs at all — tombstone GC
         must visit every file) are read and rewritten; clean buckets carry
         their existing refs untouched. A tail of fresh deltas over 1% of
-        buckets compacts 1% of the table, not all of it.
+        buckets compacts 1% of the table, not all of it. The read and
+        rewrite is ``_rewrite``: one Exchange, up to one write task per
+        core.
 
         ``retain_tombstones=True`` (default) keeps the winning tombstone
         rows: compaction can then run at ANY point mid-stream — an
@@ -828,9 +867,21 @@ class MergeTable:
         the tombstones can still arrive (out-of-order horizon passed) —
         that is the GC/expiry compaction.
 
-        Rewritten buckets are SORTED by ``stats_cols`` (Iceberg sort-order
-        parity): sorted data gives parquet row-group pruning real bite,
-        and with ``rows_per_file`` set, each bucket splits into several
+        A tombstone-retaining compaction commits at the REF level: it
+        swaps exactly the refs it read and keeps every ref committed after
+        them, so it rebases over any concurrent delta append (the fold
+        keeps each winner's version, ``_arrival`` and ``_deleted``, and LWW
+        is a max, so resolving fold(R) ∪ D equals resolving R ∪ D). It
+        conflicts, and recomputes, only when one of its input refs is gone
+        (another compaction, a COW ``merge``, ``update_where``,
+        ``rebucket``, ``rollback``), the bucket count changed, or the
+        schema diverged. That is what lets a MOR ``CdcApplyPipeline`` run
+        it beside the batch whose cadence trips it (``run_batch``).
+        ``retain_tombstones=False`` keeps the bucket-level rule: any
+        intervening commit to its buckets forces a recompute.
+
+        Rewritten buckets are SORTED by ``stats_cols``; with
+        ``rows_per_file`` set, each bucket splits into several
         range-disjoint files whose per-file footer bounds let
         ``read_where`` open O(1) files per bucket for a narrow range."""
         def attempt(snap: dict) -> MergeMetrics:
@@ -838,13 +889,13 @@ class MergeTable:
                      if r.get("delta") or not retain_tombstones}
             if not dirty:
                 return self._write_and_commit(snap, batch_id, None, set())
-            resolved = self._resolved(
-                snap, [r for r in snap["refs"] if r["bucket"] in dirty])
-            if not retain_tombstones:
-                resolved = resolved.filter(~F.col(_DELETED_COL))
+            read = [r for r in snap["refs"] if r["bucket"] in dirty]
             return self._write_and_commit(
-                snap, batch_id, self._sorted_by_bucket(snap, resolved, len(dirty)),
-                dirty, rows_per_file=rows_per_file)
+                snap, batch_id,
+                self._rewrite(snap, read, snap, len(dirty),
+                              drop_tombstones=not retain_tombstones),
+                dirty, rows_per_file=rows_per_file,
+                swap_refs=read if retain_tombstones else None)
 
         return self._commit_with_retries("compact", batch_id, attempt)
 
@@ -855,18 +906,19 @@ class MergeTable:
         A bucket count chosen at day one is wrong at 10^10 keys: too few
         buckets -> giant files and coarse MERGE pruning; too many -> small
         files. Because the bucket id is derived (hash(key) % n), changing n
-        only requires one LWW-resolved rewrite — the snapshot carries the
-        new count, every later merge/read derives buckets from it, and
-        time travel to pre-rebucket versions still resolves through those
-        snapshots' own n_buckets. Idempotent by batch_id. A global
-        restructure commits EXCLUSIVELY — it never rebases; racing with any
-        concurrent commit recomputes from the fresh snapshot."""
+        only requires one LWW-resolved rewrite (``_rewrite``) — the
+        snapshot carries the new count, every later merge/read derives
+        buckets from it, and time travel to pre-rebucket versions still
+        resolves through those snapshots' own n_buckets. Idempotent by
+        batch_id. A global restructure commits EXCLUSIVELY — it never
+        rebases; racing with any concurrent commit recomputes from the
+        fresh snapshot."""
         def attempt(snap: dict) -> MergeMetrics:
-            resolved = self._resolved(snap, snap["refs"])
             old_buckets = {r["bucket"] for r in snap["refs"]}
-            snap = {**snap, "n_buckets": int(n_buckets)}
+            out_snap = {**snap, "n_buckets": int(n_buckets)}
             return self._write_and_commit(
-                snap, batch_id, self._sorted_by_bucket(snap, resolved, int(n_buckets)),
+                out_snap, batch_id,
+                self._rewrite(snap, snap["refs"], out_snap, int(n_buckets)),
                 old_buckets, exclusive=True)
 
         return self._commit_with_retries("rebucket", batch_id, attempt)
@@ -993,6 +1045,7 @@ class MergeTable:
         pre_commit=None,
         rows_per_file: int | None = None,
         counts=None,
+        swap_refs: list[dict] | None = None,
     ) -> MergeMetrics:
         """The commit tail every write kind shares, computed against parent
         ``snap``.
@@ -1001,7 +1054,9 @@ class MergeTable:
         written bucket-partitioned into an attempt-unique directory; None
         commits the batch id alone. ``replace`` is the bucket set whose
         refs the commit swaps for the written ones (None = delta append,
-        ``exclusive`` = never rebase, see ``_cas_commit``). Then, in order:
+        ``exclusive`` = never rebase, see ``_cas_commit``); ``swap_refs``
+        narrows the swap to exactly those refs, all inside ``replace``
+        (the ref-level replace of ``compact``). Then, in order:
         a non-exclusive replace that wrote a bucket outside ``replace``
         raises — the retained old refs for that bucket would silently
         duplicate keys; ``pre_commit()`` runs, on every path; the CAS
@@ -1037,7 +1092,9 @@ class MergeTable:
         new_snap, skipped = self._cas_commit(
             snap, batch_id,
             self._make_refs(snap, written, delta=replace is None),
-            replace, exclusive=exclusive)
+            replace, exclusive=exclusive,
+            swap=None if swap_refs is None
+            else frozenset(r["path"] for r in swap_refs))
         if skipped:
             return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
                                 skipped_already_committed=True)
@@ -1052,7 +1109,10 @@ class MergeTable:
     # ------------------------------------------------ optimistic concurrency
     @staticmethod
     def _merged_refs(base_refs: list[dict], new_refs: list[dict],
-                     replace_buckets: set | None) -> list[dict]:
+                     replace_buckets: set | None,
+                     swap: frozenset | None = None) -> list[dict]:
+        if swap is not None:  # ref-level replace
+            return [r for r in base_refs if r["path"] not in swap] + new_refs
         if replace_buckets is None:  # delta append — never drop prior refs
             return list(base_refs) + new_refs
         return [r for r in base_refs
@@ -1087,6 +1147,7 @@ class MergeTable:
         new_refs: list[dict],
         replace_buckets: set | None,
         exclusive: bool = False,
+        swap: frozenset | None = None,
     ) -> tuple[dict, bool]:
         """Atomically publish a commit computed against parent snapshot
         ``ours`` (the caller's copy, possibly carrying schema evolution).
@@ -1096,8 +1157,10 @@ class MergeTable:
 
         - parent unchanged → plain advance (fast path);
         - advanced → REBASE onto the newer snapshot when provably safe:
-          delta appends always union in; COW replacements union in iff no
-          intervening commit touched ``replace_buckets`` and schema
+          delta appends always union in; a ref-level replace (``swap``,
+          the ref paths it read) unions in iff every one of those refs is
+          still current; COW replacements union in iff no intervening
+          commit touched ``replace_buckets``; all of them only when schema
           evolution did not diverge; otherwise ``CommitConflict``;
         - ``exclusive`` commits (rebucket — a global restructure) never
           rebase.
@@ -1117,7 +1180,7 @@ class MergeTable:
                     **ours,
                     **self._commit_fields(ours, batch_id),
                     "refs": self._merged_refs(ours["refs"], new_refs,
-                                              replace_buckets),
+                                              replace_buckets, swap),
                 }
                 self._write_snapshot(new_snap)
                 return new_snap, False
@@ -1157,7 +1220,15 @@ class MergeTable:
             current_sid = (ours["current_schema_id"] if we_evolved
                            else cur["current_schema_id"])
 
-            if replace_buckets is not None:
+            if swap is not None:
+                # O(refs), no walk: the swapped refs still being current
+                # is the whole precondition (see ``compact``)
+                gone = swap - {r["path"] for r in cur["refs"]}
+                if gone:
+                    raise CommitConflict(
+                        f"{len(gone)} input refs were replaced by a "
+                        "concurrent commit; rewrite is stale")
+            elif replace_buckets is not None:
                 if cur["version"] - ours["version"] > 32:
                     # the disjointness proof below walks every intervening
                     # snapshot WHILE HOLDING the commit lock — bound that
@@ -1181,7 +1252,7 @@ class MergeTable:
                 "schemas": merged_schemas,
                 "current_schema_id": current_sid,
                 "refs": self._merged_refs(cur["refs"], new_refs,
-                                          replace_buckets),
+                                          replace_buckets, swap),
             }
             self._write_snapshot(new_snap)
             return new_snap, False

@@ -102,7 +102,8 @@ def test_mor_fastpath_apply_has_no_exchange(spark, wal_path, tmpdir_path):
     tbl.merge_mor(df, "b1")
     plan = plan_of(written[0])
     assert plan.count("Exchange") == 1, plan
-    assert plan.count("Exchange hashpartitioning(_bucket") == 1, plan
+    assert plan.count("Exchange shufflepartitionidpassthrough("
+                      "direct_shuffle_partition_id(_bucket") == 1, plan
 
 
 def test_sessionize_single_exchange(spark):
