@@ -45,7 +45,8 @@ from pyspark.sql import types as T
 from ..operators.decode import Decoder
 from ..operators.lww import ARRIVAL_COL
 from ..state.stores import CheckpointStore, MetricsLog
-from ..tables.merge_table import ExprCache, MergeTable, _pyarrow_file_bounds
+from ..tables.merge_table import (ExprCache, MergeTable, _pyarrow_file_bounds,
+                                   local_frame)
 
 TARGET_FIELDS = [
     ("repo", T.StringType()),
@@ -252,7 +253,7 @@ class CdcApplyPipeline:
         keep = [(p, b) for p, _, b in files
                 if b is None or (b[1] > seq_lo and b[0] <= seq_hi)]
         if not keep:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
         reader = self.spark.read.schema(schema)
         # past this many root paths Spark lists them in a Spark job; the
         # whole dir is one root, listed on the driver
@@ -695,7 +696,7 @@ class CdcApplyPipeline:
             base = self._events_schema
             fields = base + [T.StructField("error", T.StringType(), True),
                              T.StructField("attempts", T.IntegerType(), True)]
-            return self.spark.createDataFrame([], T.StructType(fields))
+            return local_frame(self.spark, T.StructType(fields))
         return self.spark.read.option("mergeSchema", "true") \
             .parquet(f"{self.quarantine_dir}/*")
 

@@ -84,13 +84,19 @@ import time
 import uuid
 from dataclasses import asdict, dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators.lww import ARRIVAL_COL, dedupe_lww
 
 _BUCKET_COL = "_bucket"
+# a write's layout key (never written): the bucket's rank in the write's
+# sorted bucket set
+_RANK_COL = "_rank"
 _DELETED_COL = "_deleted"
 # hidden columns stored next to the data: the tombstone flag and the
 # winning row's arrival (the LWW tie-break)
@@ -121,16 +127,22 @@ _MAX_COMMIT_RETRIES = 16
 _HARVEST_DISTRIBUTE_FILES = 1024
 
 
+def local_frame(spark: SparkSession, schema: T.StructType,
+                rows: list[tuple] = ()) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order) as a local relation built
+    through Arrow: a projection or ``collect`` over it starts no Spark job
+    (``createDataFrame`` over a list builds an RDD of Python rows)."""
+    arrow = to_arrow_schema(schema)
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=arrow), schema)
+
+
 def _pyarrow_file_bounds(path: str, cols: list[str]) -> dict:
     """Min/max of ``cols`` from ONE parquet file's footer. Module-level and
     driver-state-free so it ships to executors in the distributed harvest;
     the driver thread-pool path calls the identical function, so both
     paths are bit-identical by construction. A column is omitted when any
     row group lacks stats or the stats type is not JSON-portable."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow is baked in
-        return {}
     md = pq.ParquetFile(path).metadata
     idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
     fb: dict = {}
@@ -375,7 +387,7 @@ class MergeTable:
         and the chunks are unioned: building the read starts no job."""
         full = self._stored_schema(snap)
         if not refs:
-            return self.spark.createDataFrame([], full)
+            return local_frame(self.spark, full)
         by_schema: dict[str, list[str]] = {}
         for r in refs:
             by_schema.setdefault(r["schema_id"], []).append(
@@ -395,20 +407,17 @@ class MergeTable:
             df = df.union(p)  # aligned: same columns, same order
         return df
 
-    def _resolved(self, snap: dict, refs: list[dict]) -> DataFrame:
-        """``refs``' rows, one per key. Only a bucket with delta refs can
-        hold a key twice, so only then does the LWW resolution run — and
-        it runs BEFORE tombstones are filtered (filtering first would
-        resurrect deleted keys)."""
+    def _read(self, snap: dict, refs: list[dict], with_deleted: bool) -> DataFrame:
+        """``refs``' rows, one per key, in the public read shape:
+        ``_arrival`` never surfaces, and ``_deleted`` only with
+        ``with_deleted``. Only a bucket with delta refs can hold a key
+        twice, so only then does the LWW resolution run — BEFORE
+        tombstones are filtered (filtering first would resurrect deleted
+        keys)."""
         df = self._read_refs(snap, refs)
         if any(r.get("delta") for r in refs):
             df = dedupe_lww(df, snap["key_cols"], snap["version_cols"])
-        return df
-
-    def _read(self, snap: dict, refs: list[dict], with_deleted: bool) -> DataFrame:
-        """The public read shape: ``_arrival`` never surfaces, and
-        ``_deleted`` only with ``with_deleted``."""
-        df = self._resolved(snap, refs).drop(ARRIVAL_COL)
+        df = df.drop(ARRIVAL_COL)
         if not with_deleted:
             df = df.filter(~F.col(_DELETED_COL)).drop(_DELETED_COL)
         return df
@@ -598,23 +607,19 @@ class MergeTable:
                version: int | None = None,
                as_of_ts: float | None = None) -> DataFrame:
         """Bucket-pruned point read: hash each key to its bucket on the
-        driver (same xxhash64 the writer used, evaluated via a 1-row Spark
-        expression batch), scan ONLY those buckets' refs, and filter to the
-        exact keys. A serving-style key lookup touches O(keys) buckets out
-        of thousands — never the table. ``version``/``as_of_ts``
-        time-travel the point read ("what did this key hold at 2am")."""
+        driver (same xxhash64 the writer used, over a local relation: no
+        Spark job), scan ONLY those buckets' refs, and filter to the exact
+        keys. A serving-style key lookup touches O(keys) buckets out of
+        thousands — never the table. ``version``/``as_of_ts`` time-travel
+        the point read ("what did this key hold at 2am")."""
         snap = self._snap_for(version, as_of_ts)
         key_cols = snap["key_cols"]
-        # probe schema MUST follow key_cols order — createDataFrame binds
-        # tuples by position, and callers pass key tuples in key_cols order
+        # probe schema MUST follow key_cols order — the probe binds tuples
+        # by position, and callers pass key tuples in key_cols order
         by_name = {f.name: f for f in self.schema(snap).fields}
-        probe = self.spark.createDataFrame(
-            key_values, T.StructType([by_name[c] for c in key_cols])
-        )
-        buckets = sorted({
-            r["_b"] for r in
-            probe.withColumn("_b", self.bucket_expr(snap)).collect()
-        })
+        probe = local_frame(self.spark, T.StructType(
+            [by_name[c] for c in key_cols]), key_values)
+        buckets = {r[0] for r in probe.select(self.bucket_expr(snap)).collect()}
         # the resolved snapshot flows through: bucket spec, refs, AND the
         # read itself must all come from the SAME (possibly time-traveled)
         # state — reading CURRENT here would leak post-as-of data
@@ -637,10 +642,6 @@ class MergeTable:
         Per-ref row counts and byte sizes, delta depth per bucket, and the
         small-file signal an auto-compaction policy needs. O(files) driver
         metadata reads (the same footers the bounds harvest touches)."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover
-            return {}
         snap = self.snapshot()
         per_bucket: dict[int, dict] = {}
         total_rows = 0
@@ -747,38 +748,57 @@ class MergeTable:
             lambda: (F.col(_OP_COL) == F.lit(_DELETE_OP)) if has_op
             else F.lit(False)))
 
-    def _bucket_layout(self, df: DataFrame, n_tasks: int) -> DataFrame:
-        """``df`` (carrying ``_BUCKET_COL``) laid out by bucket: bucket b
-        goes to write task ``b mod k``, ``k = min(n_tasks,
-        defaultParallelism)``. Ids 0..n-1 spread evenly (hashing them
-        lands 6/4/3/3 on 4 tasks), with no sampling job, and a later
-        grouping that includes ``_BUCKET_COL`` reuses the exchange. The
-        explicit task count also keeps AQE from coalescing it."""
-        k = min(max(n_tasks, 1), self.spark.sparkContext.defaultParallelism)
-        return df.repartitionById(
-            k, self._expr("bucket_col", lambda: F.col(_BUCKET_COL)))
+    def _bucket_layout(self, df: DataFrame, snap: dict,
+                       buckets=None) -> DataFrame:
+        """``df`` with ``snap``'s bucket id, laid out for a write of
+        ``buckets`` (default: all): bucket b's rank r in the sorted set
+        (``_RANK_COL``, a literal array indexed by b) goes to task ``r mod
+        k``, ``k = min(|buckets|, defaultParallelism)``. Dense ranks spread
+        any set evenly, with no sampling job: hashing ids 0..15 lands
+        6/4/3/3 on 4 tasks, and placing {0, 4, 8, 12} by id puts all in
+        task 0. A grouping that includes ``_RANK_COL`` reuses the exchange,
+        and the task count keeps AQE from coalescing it."""
+        n = snap["n_buckets"]
+        rank = {b: r for r, b in enumerate(sorted(buckets or range(n)))}
+        k = min(len(rank), self.spark.sparkContext.defaultParallelism)
+        # one SQL string is one py4j round trip; F.lit(list) is ~5 per id
+        ranks = ",".join(str(rank.get(b, 0)) for b in range(n))
+        return (df.withColumn(_BUCKET_COL, self.bucket_expr(snap))
+                .withColumn(_RANK_COL, F.expr(f"get(array({ranks}), {_BUCKET_COL})"))
+                .repartitionById(k, self._expr("rank_col", lambda: F.col(_RANK_COL))))
 
     def _rewrite(self, snap: dict, refs: list[dict], out_snap: dict,
-                 n_buckets: int, drop_tombstones: bool = False) -> DataFrame:
-        """The resolve-and-rewrite step ``compact`` and ``rebucket`` share:
-        ``refs``' rows under ``out_snap``'s bucket spec, laid out over
-        ``n_buckets`` write buckets (``_bucket_layout``), resolved per
-        (bucket, key) in that layout — only when a delta ref can hold a key
-        twice — and sorted within each bucket by ``stats_cols`` (Iceberg
-        sort-order parity: sorted data gives parquet row-group pruning real
-        bite). One Exchange in all; the resolution reuses it. Tombstones
-        are dropped after the resolution, never before (filtering first
-        would resurrect deleted keys)."""
-        df = self._bucket_layout(
-            self._read_refs(snap, refs).withColumn(
-                _BUCKET_COL, self.bucket_expr(out_snap)), n_buckets)
-        if any(r.get("delta") for r in refs):
-            df = dedupe_lww(df, [_BUCKET_COL, *snap["key_cols"]],
-                            snap["version_cols"])
+                 buckets=None, batch: DataFrame | None = None,
+                 assign: dict | None = None,
+                 drop_tombstones: bool = False) -> DataFrame:
+        """The resolve-and-rewrite step of every bucket-replacing write
+        (``merge``, ``update_where``, ``compact``, ``rebucket``): ``refs``'
+        rows, plus ``batch``'s (``merge``: tagged ``_TGT_COL`` false, the
+        target rows true, with per-key ``_has_src``/``_has_tgt`` flags),
+        under ``out_snap``'s bucket spec, laid out over ``buckets``
+        (``_bucket_layout``), resolved per (rank, key) when a key can hold
+        two rows, given ``assign``'s column values, and sorted within each
+        bucket by ``stats_cols`` (Iceberg sort-order parity: sorted data
+        gives parquet row-group pruning real bite). One Exchange in all;
+        the rank never reaches a file. Tombstones are dropped after the
+        resolution, never before (that would resurrect deleted keys)."""
+        df = self._read_refs(snap, refs)
+        aggs = []
+        if batch is not None:
+            tgt = F.col(_TGT_COL)
+            df = batch.withColumn(_TGT_COL, F.lit(False)).unionByName(
+                df.withColumn(_TGT_COL, F.lit(True)))
+            aggs = [F.max(~tgt).alias("_has_src"), F.max(tgt).alias("_has_tgt")]
+        df = self._bucket_layout(df, out_snap, buckets)
+        if batch is not None or any(r.get("delta") for r in refs):
+            df = dedupe_lww(df, [_RANK_COL, *snap["key_cols"]],
+                            snap["version_cols"], *aggs)
+        if assign:
+            df = df.withColumns(assign)
         if drop_tombstones:
             df = df.filter(~F.col(_DELETED_COL))
         sort_cols = [c for c in (snap.get("stats_cols") or []) if c in df.columns]
-        return df.sortWithinPartitions(_BUCKET_COL, *sort_cols)
+        return df.sortWithinPartitions(_BUCKET_COL, *sort_cols).drop(_RANK_COL)
 
     # ----------------------------------------------------------- MOR write
     def merge_mor(
@@ -802,18 +822,16 @@ class MergeTable:
         a zero-row batch included. An exception from it aborts the commit
         (attempt files are dead weight, GC'able).
 
-        The write path is source -> bucketed APPEND of rows + tombstones.
-        The batch is exchanged on its bucket id into
-        ``min(n_buckets, defaultParallelism)`` write tasks, bucket b in
-        task b mod k (``_bucket_layout``), so every bucket lands in exactly
-        one task and the tasks get even bucket counts: the append writes
-        ONE delta file per touched bucket, with every core writing.
-        In-batch duplicates are written as they are. No target-side scan,
-        no join, no rewrite of carried rows — bytes written (and shuffled)
-        per batch are O(batch), not O(table). Without the exchange a
-        hash-spread batch puts every bucket in every scan task, so files
-        per batch would be ``tasks × n_buckets``; coalescing to one task
-        instead writes them serially on one core.
+        The write path is source -> bucketed APPEND of rows + tombstones,
+        laid out over every bucket (``_bucket_layout``; a bucket's rank is
+        its id), so each bucket lands in exactly one of ``min(n_buckets,
+        defaultParallelism)`` write tasks with even bucket counts: ONE
+        delta file per touched bucket, with every core writing. In-batch
+        duplicates are written as they are. No target-side scan, no join,
+        no rewrite of carried rows — bytes written (and shuffled) per batch
+        are O(batch), not O(table). Without the exchange every scan task
+        would write every bucket (``tasks × n_buckets`` files per batch);
+        coalescing to one task writes them serially on one core.
 
         This is the write-optimized half of the Hudi/Paimon MOR trade:
         readers resolve LWW across base + deltas (``read`` does a global
@@ -835,17 +853,11 @@ class MergeTable:
         def attempt(snap: dict) -> MergeMetrics:
             snap = self._evolved(snap, source)
             src = self._align(self._tombstoned(source), self._stored_schema(snap))
-            src = self._bucket_layout(
-                src.withColumn(_BUCKET_COL, self.bucket_expr(snap)),
-                snap["n_buckets"])
+            src = self._bucket_layout(src, snap).drop(_RANK_COL)
             return self._write_and_commit(snap, batch_id, src, None,
                                           pre_commit=pre_commit)
 
         return self._commit_with_retries("merge_mor", batch_id, attempt)
-
-    def has_deltas(self, snap: dict | None = None) -> bool:
-        snap = snap or self.snapshot()
-        return any(r.get("delta") for r in snap["refs"])
 
     def compact(self, batch_id: str, retain_tombstones: bool = True,
                 rows_per_file: int | None = None) -> MergeMetrics:
@@ -880,10 +892,9 @@ class MergeTable:
         ``retain_tombstones=False`` keeps the bucket-level rule: any
         intervening commit to its buckets forces a recompute.
 
-        Rewritten buckets are SORTED by ``stats_cols``; with
-        ``rows_per_file`` set, each bucket splits into several
-        range-disjoint files whose per-file footer bounds let
-        ``read_where`` open O(1) files per bucket for a narrow range."""
+        With ``rows_per_file`` set, each sorted bucket splits into
+        range-disjoint files whose footer bounds let ``read_where`` open
+        O(1) files per bucket for a narrow range."""
         def attempt(snap: dict) -> MergeMetrics:
             dirty = {r["bucket"] for r in snap["refs"]
                      if r.get("delta") or not retain_tombstones}
@@ -892,7 +903,7 @@ class MergeTable:
             read = [r for r in snap["refs"] if r["bucket"] in dirty]
             return self._write_and_commit(
                 snap, batch_id,
-                self._rewrite(snap, read, snap, len(dirty),
+                self._rewrite(snap, read, snap, dirty,
                               drop_tombstones=not retain_tombstones),
                 dirty, rows_per_file=rows_per_file,
                 swap_refs=read if retain_tombstones else None)
@@ -918,7 +929,7 @@ class MergeTable:
             out_snap = {**snap, "n_buckets": int(n_buckets)}
             return self._write_and_commit(
                 out_snap, batch_id,
-                self._rewrite(snap, snap["refs"], out_snap, int(n_buckets)),
+                self._rewrite(snap, snap["refs"], out_snap),
                 old_buckets, exclusive=True)
 
         return self._commit_with_retries("rebucket", batch_id, attempt)
@@ -940,75 +951,72 @@ class MergeTable:
         included) raises ``ValueError`` before anything is written.
         Idempotent by `batch_id`.
 
-        The merge is one resolution: the target rows of the touched buckets
-        (base and deltas) and the aligned batch are resolved together by
-        ``dedupe_lww`` and the touched buckets rewritten from the winners.
-        A provenance flag is the resolved row's last field, so it only
-        separates byte-identical rows: a verbatim replay resolves to the
-        stored row and counts as stale. The returned insert/update/stale/
-        delete counts (and the lineage row) come from the winner's
-        provenance and per-key has-source/has-target flags, observed on
-        the bucket write itself (``DataFrame.observe``): no extra Spark
-        job, no cached frame.
+        The merge is ``_rewrite`` of the touched buckets with the aligned
+        batch as one more input. The provenance flag follows every data
+        field in the resolved row, so it only separates byte-identical
+        rows: a verbatim replay resolves to the stored row and counts as
+        stale. The returned insert/update/stale/delete counts (and the
+        lineage row) come from the winner's provenance and per-key
+        has-source/has-target flags, observed on the bucket write itself
+        (``DataFrame.observe``): no extra Spark job.
 
         ``pre_commit``: zero-arg callable run after the bucket write,
         before the snapshot CAS (see ``merge_mor`` — the quarantine-write
         overlap barrier). It runs on every commit path, including the
         id-only commit of a batch that touches no bucket.
 
-        ``touched_buckets``: pass the batch's bucket set if the caller
-        already knows it (the apply pipeline computes it in its stats pass)
-        — saves one job. It must be a SUPERSET of the source's buckets:
-        source rows in an un-declared bucket would land in a new file while
-        the old refs for that bucket are retained — silent key duplication
-        that read() would not resolve (no delta flag). The commit verifies
-        this and raises before the snapshot flips.
+        ``touched_buckets``: the batch's bucket set, if the caller already
+        knows it (the apply pipeline takes it from its stats pass). It must
+        be a SUPERSET of the source's buckets: source rows in an
+        un-declared bucket would land in a new file while the old refs for
+        that bucket are retained — silent key duplication that read() would
+        not resolve (no delta flag). The commit verifies this and raises
+        before the snapshot flips. Without it, ``source`` is evaluated
+        once: persisted, its bucket set taken by the pass that fills the
+        cache, and unpersisted before ``merge`` returns.
 
         Multi-writer safe: the commit is published via ``_cas_commit``; on
         a bucket-overlap conflict the whole merge recomputes against the
         fresh snapshot (bounded retries).
         """
+        own_cache = touched_buckets is None and not source.is_cached
+        if own_cache:
+            source = source.persist()
+
         def attempt(snap: dict) -> MergeMetrics:
             snap = self._evolved(snap, source)
             src = self._align(self._tombstoned(source), self._stored_schema(snap))
-            src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap))
             if touched_buckets is not None:
                 touched = set(touched_buckets)
             else:
-                touched = {r[_BUCKET_COL]
-                           for r in src.select(_BUCKET_COL).distinct().collect()}
+                touched = {r[0] for r in src.select(
+                    self.bucket_expr(snap)).distinct().collect()}
             if not touched:
                 # an all-invalid batch commits nothing but its id
                 return self._write_and_commit(snap, batch_id, None, set(),
                                               pre_commit=pre_commit)
 
-            tgt = self._read_refs(
-                snap, [r for r in snap["refs"] if r["bucket"] in touched])
-            tgt = tgt.withColumn(_BUCKET_COL, self.bucket_expr(snap))
-            # one exchange lays the rows out by bucket; the resolution
-            # groups by (bucket, key), which that layout already satisfies
-            both = (src.withColumn(_TGT_COL, F.lit(False))
-                    .unionByName(tgt.withColumn(_TGT_COL, F.lit(True)))
-                    .repartition(min(len(touched), 200), F.col(_BUCKET_COL)))
-            tgt_flag = F.col(_TGT_COL)
-            won = dedupe_lww(both, [_BUCKET_COL, *snap["key_cols"]],
-                             snap["version_cols"],
-                             F.max(~tgt_flag).alias("_has_src"),
-                             F.max(tgt_flag).alias("_has_tgt"))
-            from_src = ~tgt_flag
+            won = self._rewrite(
+                snap, [r for r in snap["refs"] if r["bucket"] in touched],
+                snap, touched, batch=src)
+            tgt = F.col(_TGT_COL)
             obs = Observation()  # one per attempt: it can only be used once
             out = won.observe(
                 obs,
-                F.count_if(from_src & ~F.col("_has_tgt")).alias("n_inserted"),
-                F.count_if(from_src & F.col("_has_tgt")).alias("n_updated"),
-                F.count_if(tgt_flag & F.col("_has_src")).alias("n_stale_ignored"),
-                F.count_if(from_src & F.col(_DELETED_COL)).alias("n_deleted"),
+                F.count_if(~tgt & ~F.col("_has_tgt")).alias("n_inserted"),
+                F.count_if(~tgt & F.col("_has_tgt")).alias("n_updated"),
+                F.count_if(tgt & F.col("_has_src")).alias("n_stale_ignored"),
+                F.count_if(~tgt & F.col(_DELETED_COL)).alias("n_deleted"),
             ).drop(_TGT_COL, "_has_src", "_has_tgt")
             return self._write_and_commit(snap, batch_id, out, touched,
                                           pre_commit=pre_commit,
                                           counts=lambda: obs.get)
 
-        return self._commit_with_retries("merge", batch_id, attempt)
+        try:
+            return self._commit_with_retries("merge", batch_id, attempt)
+        finally:
+            if own_cache:
+                source.unpersist()
 
     # ------------------------------------------------------ commit protocol
     def _commit_with_retries(self, kind: str, batch_id: str, attempt_fn) -> MergeMetrics:
@@ -1406,38 +1414,31 @@ class MergeTable:
     # -------------------------------------------------------------- repair
     def update_where(self, condition, assignments: dict, batch_id: str) -> MergeMetrics:
         """Column-repair pass (reference fix-squares, SURVEY T10): rewrite
-        rows matching `condition` with `assignments`.
+        rows matching `condition` with `assignments` (column -> value
+        expression). Every assignment and the condition see the row as it
+        was before the repair, as in SQL's ``UPDATE ... SET``.
 
         Bucket-pruned: job 1 finds the predicate's touched buckets AND the
         per-bucket hit counts in one aggregation (no separate count job);
-        job 2 rewrites ONLY those buckets, resolving any MOR deltas for
-        them in passing. Untouched buckets keep their existing file refs —
-        a repair touching 1% of keys rewrites ~1% of the table, not all of
+        then ``_rewrite`` rewrites ONLY those buckets — one Exchange,
+        resolving any MOR deltas for them and applying the assignments to
+        the winners. Untouched buckets keep their existing file refs — a
+        repair touching 1% of keys rewrites ~1% of the table, not all of
         it. Idempotent by batch_id."""
         def attempt(snap: dict) -> MergeMetrics:
+            hit = condition & ~F.col(_DELETED_COL)
             # job 1: touched buckets + hit counts in one pruned-scan aggregate
-            hits = (
-                self.read(with_deleted=True, version=snap["version"])
-                .filter(condition & ~F.col(_DELETED_COL))
-                .groupBy(self.bucket_expr(snap).alias(_BUCKET_COL))
-                .count()
-                .collect()
-            )
-            touched = {r[_BUCKET_COL] for r in hits}
-            n_fixed = sum(r["count"] for r in hits)
+            hits = dict(self._read(snap, snap["refs"], True).filter(hit)
+                        .groupBy(self.bucket_expr(snap)).count().collect())
+            touched, n_fixed = set(hits), sum(hits.values())
             if not touched:
                 return self._write_and_commit(snap, batch_id, None, set())
 
-            # job 2: rewrite only the touched buckets (LWW-resolved, so the
-            # new file can replace base + delta refs for those buckets)
-            cur = self._resolved(
-                snap, [r for r in snap["refs"] if r["bucket"] in touched])
-            fixed = cur.withColumn(_BUCKET_COL, self.bucket_expr(snap))
-            for col, expr in assignments.items():
-                fixed = fixed.withColumn(
-                    col, F.when(condition & ~F.col(_DELETED_COL), expr).otherwise(F.col(col))
-                )
-            out = fixed.repartition(max(1, min(len(touched), 200)), F.col(_BUCKET_COL))
+            out = self._rewrite(
+                snap, [r for r in snap["refs"] if r["bucket"] in touched],
+                snap, touched,
+                assign={c: F.when(hit, e).otherwise(F.col(c))
+                        for c, e in assignments.items()})
             return self._write_and_commit(snap, batch_id, out, touched,
                                           counts=lambda: {"n_updated": n_fixed})
 
@@ -1450,15 +1451,6 @@ class MergeTable:
         for r in snap["refs"]:
             m.setdefault(r["bucket"], set()).add(r["path"])
         return {b: frozenset(p) for b, p in m.items()}
-
-    def changed_buckets(self, from_version: int, to_version: int | None = None) -> list[int]:
-        """Buckets whose file-ref sets differ between the two snapshots —
-        the manifest diff that makes ``changes()`` scan O(changed data),
-        never O(table)."""
-        snap_a = self.snapshot_at(from_version)
-        snap_b = self.snapshot() if to_version is None else self.snapshot_at(to_version)
-        ba, bb = self._refs_by_bucket(snap_a), self._refs_by_bucket(snap_b)
-        return sorted(b for b in set(ba) | set(bb) if ba.get(b) != bb.get(b))
 
     def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Incremental changelog between two committed snapshots (Delta
@@ -1497,14 +1489,14 @@ class MergeTable:
         ba, bb = self._refs_by_bucket(snap_a), self._refs_by_bucket(snap_b)
         changed = {b for b in set(ba) | set(bb) if ba.get(b) != bb.get(b)}
         if not changed:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, out_schema)
 
         def side(snap: dict) -> DataFrame:
             # the key STRUCT is the join key: struct equality is per-field
             # null-safe (struct(NULL,'x') = struct(NULL,'x') is true), and
             # the struct itself is never NULL, so it also marks presence
-            df = self._resolved(snap, [r for r in snap["refs"]
-                                       if r["bucket"] in changed])
+            df = self._read(snap, [r for r in snap["refs"]
+                                   if r["bucket"] in changed], True)
             return self._align(df, full).withColumn("_k", F.struct(*key_cols))
 
         j = side(snap_a).alias("a").join(

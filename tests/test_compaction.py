@@ -19,23 +19,13 @@ from ore_etl_spark.datagen.wal import (decode_payload_py, generate_wal,
 from ore_etl_spark.pipeline.apply import CdcApplyPipeline, target_schema
 from ore_etl_spark.tables.merge_table import MergeTable
 
+from tests.jobs import jobs_run
 from tests.test_merge_table import df, make_table, state
 from tests.tie_events import _payload
 
 COLS = ["repo", "path", "commit", "lang", "commit_seq", "event_seq",
         "content_sha256", "content_len"]
 KEY = ["repo", "path"]
-
-
-def _jobs_in(spark, group, fn):
-    """``fn()``'s result and the Spark jobs it started on this thread."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _sorted(pdf):
@@ -104,7 +94,7 @@ def test_read_over_many_refs_starts_no_job(spark, tmpdir_path):
         tbl.merge_mor(df(spark, rows), f"b{v}")
         want.update({("r", f"p{k}"): (v, f"v{v}-{k}") for k in range(96)})
     assert len(tbl.snapshot()["refs"]) > 32
-    frame, n_jobs = _jobs_in(spark, f"read-{tmpdir_path}", tbl.read)
+    frame, n_jobs = jobs_run(spark, tbl.read)
     assert n_jobs == 0
     got = {(r["repo"], r["path"]): (r["commit_seq"], r["content"])
            for r in frame.collect()}
@@ -126,12 +116,11 @@ def test_compaction_rewrite_plans_one_exchange(spark, tmpdir_path):
         return write(snap, batch_id, out, *a, **kw)
 
     tbl._write_and_commit = spy
-    m, n_jobs = _jobs_in(spark, f"compact-{tmpdir_path}",
-                         lambda: tbl.compact("c1"))
+    m, n_jobs = jobs_run(spark, lambda: tbl.compact("c1"))
     plan = written[0]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
     assert n_jobs <= 2
-    assert m.n_buckets_touched == 8 and not tbl.has_deltas()
+    assert m.n_buckets_touched == 8 and tbl.delta_depth() == 0
     assert state(tbl) == {("r", f"p{k}"): (2, "v2") for k in range(64)}
 
 
@@ -182,7 +171,7 @@ def test_compaction_rebases_over_a_concurrent_append(spark, tmpdir_path, wal):
     assert [c[1] for c in folds] == [v]  # computed once, on v
     assert m.version == folds[0][2] == v + 2
     # the append's delta refs survive the fold
-    assert tbl.has_deltas()
+    assert tbl.delta_depth() > 0
 
     expected = replay_oracle(pdf_all)
     _assert_oracle(tbl.read(), expected)
@@ -234,7 +223,7 @@ def test_second_compaction_over_the_same_refs_recomputes(spark, tmpdir_path):
     assert [c[1] for c in calls if c[0] == "cD"] == [v1, v1 + 1]
     want = {("r", f"p{k}"): (9, "cow") for k in range(32)}
     want[("r", "p0")] = (10, "mor")
-    assert state(tbl) == want and not tbl.has_deltas()
+    assert state(tbl) == want and tbl.delta_depth() == 0
 
 
 def test_tripping_batch_commits_before_its_fold(spark, tmpdir_path, wal):

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from ore_etl_spark.pipeline.incremental_view import IncrementalAggView
 from ore_etl_spark.tables.merge_table import MergeTable
 
+from tests.jobs import jobs_run
+
 SCHEMA = T.StructType([
     T.StructField("repo", T.StringType()),
     T.StructField("path", T.StringType()),
@@ -112,6 +114,23 @@ def test_refresh_touches_only_changed_group_buckets(spark, source, tmpdir_path):
     refs_after = {r["bucket"]: r["path"] for r in view.table.snapshot()["refs"]}
     changed = {b for b in refs_before if refs_after[b] != refs_before[b]}
     assert len(changed) == 1  # one group -> one bucket rewritten
+    assert view_state(view) == brute(source)
+
+
+def test_incremental_refresh_evaluates_its_delta_once(spark, source, tmpdir_path):
+    """The view merge names no bucket set, so it takes the set from the
+    pass that materializes its source and writes from that, instead of
+    running the changelog scan, delta aggregate and view join twice."""
+    view = make_view(spark, source, tmpdir_path)
+    langs = [f"l{i}" for i in range(50)]
+    source.merge(df(spark, [("r", f"p{i}", 1, i, langs[i % 50], 1.0, "INSERT")
+                            for i in range(100)]), "b1")
+    view.refresh()
+    source.merge(df(spark, [("r", f"p{i}", 2, i, langs[(i + 1) % 50], 2.0,
+                             "UPDATE") for i in range(0, 100, 3)]), "b2")
+    res, n_jobs = jobs_run(spark, view.refresh)
+    assert res["mode"] == "incremental"
+    assert n_jobs <= 9  # 10 when the source ran twice
     assert view_state(view) == brute(source)
 
 

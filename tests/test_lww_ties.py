@@ -63,5 +63,5 @@ def test_equal_versions_resolve_by_arrival(spark, tmpdir_path, tie_wal,
     _assert_oracle(tbl.lookup([key]), expected.iloc[:1])
     if mode == "mor":
         tbl.compact("c1")
-        assert not tbl.has_deltas()
+        assert tbl.delta_depth() == 0
         _assert_oracle(tbl.read(), expected)

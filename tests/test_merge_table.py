@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from ore_etl_spark.tables.merge_table import MergeTable
 
+from tests.jobs import jobs_run
+
 SCHEMA = T.StructType([
     T.StructField("repo", T.StringType()),
     T.StructField("path", T.StringType()),
@@ -246,13 +248,8 @@ def test_cow_merge_counts_ride_the_write(spark, tmpdir_path):
                      ("b", "w", 1, 0, "n", "INSERT")])     # insert
     touched = sorted({r["_b"] for r in src.select(
         tbl.bucket_expr().alias("_b")).distinct().collect()})
-    sc = spark.sparkContext
-    group = f"cow-merge-{tmpdir_path}"
-    sc.setJobGroup(group, "cow merge job count")
-    try:
-        m = tbl.merge(src, "b2", touched_buckets=touched)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    m, n_jobs = jobs_run(
+        spark, lambda: tbl.merge(src, "b2", touched_buckets=touched))
     assert (m.n_inserted, m.n_updated, m.n_stale_ignored, m.n_deleted) == \
         (1, 2, 1, 1)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert n_jobs <= 2

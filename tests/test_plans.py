@@ -103,7 +103,7 @@ def test_mor_fastpath_apply_has_no_exchange(spark, wal_path, tmpdir_path):
     plan = plan_of(written[0])
     assert plan.count("Exchange") == 1, plan
     assert plan.count("Exchange shufflepartitionidpassthrough("
-                      "direct_shuffle_partition_id(_bucket") == 1, plan
+                      "direct_shuffle_partition_id(_rank") == 1, plan
 
 
 def test_sessionize_single_exchange(spark):

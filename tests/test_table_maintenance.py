@@ -210,7 +210,7 @@ def test_rebucket_resolves_mor_deltas(spark, tmpdir_path):
     tbl.merge_mor(df(spark, [("a", "x", 2, 0, "new", "UPDATE"),
                              ("a", "y", 2, 1, "v1", "INSERT")]), "b2")
     tbl.rebucket(16, "rb1")
-    assert not tbl.has_deltas()  # rewrite folded the delta chain
+    assert tbl.delta_depth() == 0  # rewrite folded the delta chain
     assert state(tbl) == {("a", "x"): (2, "new"), ("a", "y"): (2, "v1")}
 
 
@@ -276,7 +276,7 @@ def test_compact_rewrites_only_dirty_buckets(spark, tmpdir_path):
     m = tbl.compact("c1")
     assert m.n_buckets_touched == 1
     refs_after = {r["bucket"]: r["path"] for r in tbl.snapshot()["refs"]}
-    assert not tbl.has_deltas()
+    assert tbl.delta_depth() == 0
     for b, p in refs_before.items():
         if b not in dirty:
             assert refs_after[b] == p  # clean buckets carried untouched

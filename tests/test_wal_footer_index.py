@@ -13,6 +13,8 @@ from ore_etl_spark.pipeline import apply as apply_mod
 from ore_etl_spark.pipeline.apply import CdcApplyPipeline, target_schema
 from ore_etl_spark.tables.merge_table import MergeTable
 
+from tests.jobs import jobs_run
+
 
 def _pipe(spark, tmpdir_path, wal, **kw):
     tbl = MergeTable.create(
@@ -27,18 +29,6 @@ def _spark_range(spark, wal, fmt="parquet"):
     r = spark.read.format(fmt).load(wal).agg(
         F.min("delivery_seq"), F.max("delivery_seq")).collect()[0]
     return (r[0], r[1])
-
-
-def _jobs_run(spark, fn):
-    """(fn(), number of Spark jobs fn started on this thread)."""
-    sc = spark.sparkContext
-    sc.setJobGroup("footer-index-probe", "probe", False)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup("footer-index-probe"))
 
 
 def _write_seqs(path, seqs):
@@ -62,7 +52,7 @@ def test_delivery_range_tracks_added_rewritten_and_hidden_files(
     monkeypatch.setattr(apply_mod, "_footer_bounds",
                         lambda p: reads.append(p) or real(p))
     p = _pipe(spark, tmpdir_path, wal)
-    got, jobs = _jobs_run(spark, p.delivery_range)
+    got, jobs = jobs_run(spark, p.delivery_range)
     assert got == _spark_range(spark, wal)
     assert jobs == 0
     n_data = len(reads)
@@ -72,7 +62,7 @@ def test_delivery_range_tracks_added_rewritten_and_hidden_files(
     # a new file: only its footer is read
     _write_seqs(f"{wal}/zz-new.parquet", [got[1] + 7, got[1] + 3])
     reads.clear()
-    got2, jobs = _jobs_run(spark, p.delivery_range)
+    got2, jobs = jobs_run(spark, p.delivery_range)
     assert got2 == _spark_range(spark, wal) == (got[0], got[1] + 7)
     assert jobs == 0 and [os.path.basename(r) for r in reads] == ["zz-new.parquet"]
 
@@ -95,7 +85,7 @@ def test_jsonl_and_null_row_group_fall_back_to_spark(spark, tmpdir_path):
     spark.read.parquet(pq_wal).write.json(jl)
     pj = _pipe(spark, f"{tmpdir_path}/a", jl, events_format="jsonl")
     assert pj._wal_files() is None
-    got, jobs = _jobs_run(spark, pj.delivery_range)
+    got, jobs = jobs_run(spark, pj.delivery_range)
     assert got == _spark_range(spark, pq_wal) and jobs > 0
 
     # a file whose second row group has an all-null delivery_seq: its
@@ -109,7 +99,7 @@ def test_jsonl_and_null_row_group_fall_back_to_spark(spark, tmpdir_path):
     pn = _pipe(spark, f"{tmpdir_path}/b", nul)
     files = pn._wal_files()
     assert [b for _, _, b in files] == [None, [3, 4]]
-    got, jobs = _jobs_run(spark, pn.delivery_range)
+    got, jobs = jobs_run(spark, pn.delivery_range)
     assert got == _spark_range(spark, nul) == (3, 9) and jobs > 0
 
 
